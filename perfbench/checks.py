@@ -4,17 +4,10 @@ Each check recomputes the expected output independently of the program
 (DuckDB SQL or numpy over the generated files) and returns the set of op
 indices whose output does not match; each such op counts as failed.
 """
-import datetime as dt
 import glob
-import hashlib
-import json
-import math
-import os
 
 import duckdb
 import pyarrow.parquet as pq
-
-HERE = os.path.dirname(os.path.abspath(__file__))
 
 # the alert_tick rule set as SQL (the Scala side holds the same rules)
 K = r"CAST(regexp_extract(props, '\"k\":\s*(-?\d+)', 1) AS INTEGER)"
@@ -33,15 +26,13 @@ RULES = [
 SUPPRESS = "user_id % 10 = 3"
 
 
-def expected_ticks(data, days):
-    """Per day: rule hits, merged alerts, suppressed, live."""
+def expected_ticks(data, windows):
+    """Per window (from, to): rule hits, merged alerts, suppressed, live."""
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM "
                 f"read_parquet('{data}/events.parquet')")
     out = {}
-    for day in days:
-        d0 = dt.date.fromisoformat(day)
-        d1 = d0 + dt.timedelta(days=1)
+    for d0, d1 in windows:
         hits = " UNION ALL ".join(
             f"SELECT '{n}' AS rule, user_id, event_type, "
             f"CAST(floor(value / 100.0) AS BIGINT) AS band FROM w WHERE {p}"
@@ -54,20 +45,21 @@ def expected_ticks(data, days):
             f"{sql} SELECT count(*), count(*) FILTER (WHERE {SUPPRESS}) FROM "
             f"(SELECT DISTINCT user_id, event_type, band FROM h)").fetchone()
         events = con.execute(f"{sql} SELECT count(*) FROM w").fetchone()[0]
-        out[day] = {"rules": {n: per_rule.get(n, 0) for n, _ in RULES},
-                    "merged": merged, "suppressed": suppressed,
-                    "live": merged - suppressed, "events": events}
+        out[d0, d1] = {"rules": {n: per_rule.get(n, 0) for n, _ in RULES},
+                       "merged": merged, "suppressed": suppressed,
+                       "live": merged - suppressed, "events": events}
     return out
 
 
 def check_alert_tick(ops, data):
-    """Also sets each tick's input units: the events in its day."""
-    exp = expected_ticks(data, sorted({o["day"] for o in ops if o.get("ok")}))
+    """Also sets each tick's input units: the events in its window."""
+    exp = expected_ticks(data, sorted({(o["from"], o["to"]) for o in ops
+                                       if o.get("ok")}))
     bad = set()
     for i, o in enumerate(ops):
         if not o.get("ok"):
             continue
-        e = exp[o["day"]]
+        e = exp[o["from"], o["to"]]
         o["units"] = e["events"]
         if (o["rules"] != e["rules"] or o["merged"] != e["merged"]
                 or o["suppressed"] != e["suppressed"]
@@ -75,81 +67,6 @@ def check_alert_tick(ops, data):
                 or o["sent"] != e["live"] or o["errors"] != 0):
             bad.add(i)
     return bad
-
-
-def _canon(v):
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else f"{v:.6g}"
-    return str(v)
-
-
-def _signature(df):
-    """Order-insensitive result signature, as tools/check.py computes it
-    (row count, sorted column names, digest of the sorted canonical
-    rows); a stable digest so it can be cached across processes."""
-    cols = sorted(df.columns)
-    body = sorted("|".join(_canon(v) for v in row)
-                  for row in df[cols].values.tolist())
-    h = hashlib.sha256("\n".join(body).encode()).hexdigest()
-    return [len(body), cols, h]
-
-
-def input_digest(data):
-    """Digest of the generated input files (the oracle cache key)."""
-    h = hashlib.sha256()
-    for f in sorted(glob.glob(f"{data}/*.parquet")):
-        with open(f, "rb") as fh:
-            h.update(fh.read())
-    return h.hexdigest()
-
-
-def check_query_suite(ops, data, work, cache_dir):
-    """Spark output (dumped after the loop) vs `SparkEntry.oracleSql` in
-    DuckDB. Oracle signatures are computed once per input set (seed) and
-    query text, and cached."""
-    with open(f"{work}/oracle_sql.json") as fh:
-        oracle = json.load(fh)
-    dumped = {os.path.basename(p) for p in glob.glob(f"{work}/qout/*")}
-    con = duckdb.connect()
-    con.execute("SET threads TO 2")
-    for f in glob.glob(f"{data}/*.parquet"):
-        name = os.path.basename(f)[:-len(".parquet")]
-        con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{f}')")
-    os.makedirs(cache_dir, exist_ok=True)
-    digest = input_digest(data)
-    verdict = {}
-    for q in sorted({o["query"] for o in ops if o.get("ok")}):
-        if q not in dumped:
-            verdict[q] = False
-            continue
-        if q not in oracle:  # no oracle: the row-only check is the dump
-            verdict[q] = True
-            continue
-        key = hashlib.sha256(
-            f"{digest}\n{oracle[q]}".encode()).hexdigest()[:32]
-        cached = f"{cache_dir}/{key}.json"
-        if os.path.exists(cached):
-            with open(cached) as fh:
-                exp = json.load(fh)
-        else:
-            try:
-                exp = _signature(con.execute(oracle[q]).fetchdf())
-            except Exception:  # noqa: BLE001 - a broken oracle fails the op
-                verdict[q] = False
-                continue
-            with open(cached, "w") as fh:
-                json.dump(exp, fh)
-        got = _signature(con.execute(
-            f"SELECT * FROM read_parquet('{work}/qout/{q}/*.parquet')").fetchdf())
-        verdict[q] = got == exp
-    return {i for i, o in enumerate(ops) if o.get("ok") and not verdict[o["query"]]}
-
-
-def check_corpus_build(ops):
-    with open(f"{HERE}/pinned.json") as fh:
-        pinned = json.load(fh)["corpus_build"]
-    return {i for i, o in enumerate(ops) if o.get("ok") and any(
-        o[k] != v for k, v in pinned.items())}
 
 
 def expected_stream(data):
@@ -173,16 +90,12 @@ def check_stream_ingest(ops, data):
             if o.get("ok") and o["alerts_out"] != exp[o["batch"]]}
 
 
-def failed_ops(workload, ops, data, work, cache_dir):
+def failed_ops(workload, ops, data):
     """Indices of ops that failed or gave wrong output."""
     bad = {i for i, o in enumerate(ops) if not o.get("ok")}
     if workload == "alert_tick":
         bad |= check_alert_tick(ops, data)
-    elif workload == "query_suite":
-        bad |= check_query_suite(ops, data, work, cache_dir)
-    elif workload == "corpus_build":
-        bad |= check_corpus_build(ops)
-    elif workload == "stream_ingest":
+    else:
         bad |= check_stream_ingest(ops, data)
     return bad
 

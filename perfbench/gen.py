@@ -4,7 +4,7 @@ Every input the program sees is a parquet file written here from a numpy
 PCG64 stream keyed by the seed: the same seed gives byte-identical files,
 another seed gives different ones. Nothing else is read by the program.
 
-Shapes follow the sf0.1 test tables (TPC-H-ish star schema, an `events`
+Shapes follow the sf-scaled test tables (TPC-H-ish star schema, an `events`
 stream, `documents` and `embeddings`):
 
     python3 perfbench/gen.py <out_dir> <workload> <seed> [--probes]
@@ -33,13 +33,7 @@ TICK_EVENTS_PER_DAY = 3_300
 STREAM_BATCHES = 80
 STREAM_BATCH_EVENTS = 4_000
 STREAM_BATCH_SPAN_US = 3_600_000_000  # one hour of event time per batch
-# corpus_build: corpus size and near-duplicate share (generator knobs)
-CORPUS_DOCS = 40_000
-CORPUS_NEAR_DUP_SHARE = 0.05
-CORPUS_EXACT_DUPS = 400
-CORPUS_SHORT_DOCS = 2_000
 CORPUS_SOURCES = 20
-CORPUS_VECTORS = 20_000
 
 
 def _write(table, path):
@@ -120,7 +114,7 @@ def _embeddings_table(rng, n, dim=64, labels=10):
     })
 
 
-def sf_tables(out, rng, sf=0.1):
+def sf_tables(out, rng, sf):
     """The ten sf-shaped tables every SparkEntry query reads."""
     n_cust, n_supp = int(150_000 * sf), int(10_000 * sf)
     n_part, n_ord = int(200_000 * sf), int(1_500_000 * sf)
@@ -215,29 +209,6 @@ def tick_events(out, rng):
                                  TICK_DAYS * DAY_US)), f"{out}/events.parquet")
 
 
-def corpus(out, rng):
-    """Corpus whose census is fixed by construction (so row counts can be
-    pinned): CORPUS_SHORT_DOCS docs under the 30-token quality gate,
-    CORPUS_EXACT_DUPS verbatim copies, and a CORPUS_NEAR_DUP_SHARE share
-    of near-duplicates (a long base doc plus one appended token, Jaccard
-    >= 0.98, so LSH finds every pair)."""
-    n = CORPUS_DOCS
-    n_near = int(n * CORPUS_NEAR_DUP_SHARE)
-    n_base = n - CORPUS_SHORT_DOCS - CORPUS_EXACT_DUPS - n_near
-    base = _texts(rng, n_base, 60, 140)
-    short = _texts(rng, CORPUS_SHORT_DOCS, 12, 25)
-    # distinct base docs for the copies: each copy pairs with ONE original
-    picks = rng.choice(n_base, CORPUS_EXACT_DUPS + n_near, replace=False)
-    exact = [base[i] for i in picks[:CORPUS_EXACT_DUPS]]
-    near = [base[i] + " dup" for i in picks[CORPUS_EXACT_DUPS:]]
-    texts = base + short + exact + near
-    order = rng.permutation(len(texts))
-    texts = [texts[i] for i in order]
-    # every source keeps more than the 15-doc cap after dedup
-    _write(_documents_table(texts, rng), f"{out}/documents.parquet")
-    _write(_embeddings_table(rng, CORPUS_VECTORS), f"{out}/embeddings.parquet")
-
-
 def stream_batches(out, rng, batches=STREAM_BATCHES, size=STREAM_BATCH_EVENTS):
     """Arrival files in event-time order. Each batch repeats 2% of its own
     rows and replays 3% of the previous batch (same ids), so the dedup
@@ -273,12 +244,8 @@ def generate(out, workload, seed, probes=False):
     rng = np.random.Generator(np.random.PCG64(seed))
     if probes:
         probe(f"{out}/probe", np.random.Generator(np.random.PCG64(seed + 1)))
-    if workload == "query_suite":
-        sf_tables(out, rng)
-    elif workload == "alert_tick":
+    if workload == "alert_tick":
         tick_events(out, rng)
-    elif workload == "corpus_build":
-        corpus(out, rng)
     elif workload == "stream_ingest":
         stream_batches(out, rng)
     else:

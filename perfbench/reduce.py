@@ -13,11 +13,10 @@ kinds of record:
 A job becomes a child span named ``spark.job`` of its tagging span. Self
 time of a span is its duration minus the part of it covered by its child
 spans (overlapping children are merged, and clipped to the parent).
-
-    python3 perfbench/reduce.py <spans.jsonl>    # prints the layer table
+``run.py`` keeps the layer table in the run's record under
+``.bench_build/results/``.
 """
 import json
-import sys
 
 
 def load(path):
@@ -94,16 +93,3 @@ def jobs_in_ops(spans):
     return [s for s in spans.values()
             if s["name"] == "spark.job" and op_of(spans, s["parent"])]
 
-
-def main(path):
-    spans = tree(load(path))
-    table = layer_table(spans)
-    width = max(len(n) for n in table) if table else 4
-    print(f"{'span':<{width}}  {'count':>6}  {'total_s':>9}  {'self_s':>9}")
-    for name, r in sorted(table.items(), key=lambda kv: -kv[1]["self_s"]):
-        print(f"{name:<{width}}  {r['count']:>6}  {r['total_s']:>9.3f}  "
-              f"{r['self_s']:>9.3f}")
-
-
-if __name__ == "__main__":
-    main(sys.argv[1])

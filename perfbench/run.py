@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """graft benchmark: one command, one workload per run.
 
-    python3 perfbench/run.py --workload alert_tick --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload alert_tick --seed 1 --seconds 11 --trace 0
 
 Run it from the root of a graft checkout. It builds the harness and the
 library from source (sbt, offline; reused while the sources are
@@ -29,7 +29,7 @@ import gen  # noqa: E402
 import reduce  # noqa: E402
 
 BUILD_DIR = ".bench_build"
-WORKLOADS = ("alert_tick", "query_suite", "corpus_build", "stream_ingest")
+WORKLOADS = ("alert_tick", "stream_ingest")
 JVM_TIMEOUT_S = 150
 MB = 1048576.0
 # Spark 4 on JDK 17 outside spark-submit (as in the root build.sbt)
@@ -130,8 +130,7 @@ def run_jvm(cp, work, data, a, cores):
               "-cp", os.pathsep.join(cp), "perfbench.Main",
               "--workload", a.workload, "--data", data, "--work", work,
               "--seconds", str(a.seconds), "--trace", str(a.trace),
-              "--cores", str(cores), "--seed", str(a.seed),
-              "--costs", f"{HERE}/query_costs.tsv"])
+              "--cores", str(cores), "--seed", str(a.seed)])
     env = {k: v for k, v in os.environ.items() if not k.startswith("SPARK_")}
     env.update(SPARK_LOCAL_DIRS=f"{work}/spark-local", TMPDIR=f"{work}/tmp")
     os.makedirs(f"{work}/tmp", exist_ok=True)
@@ -148,11 +147,21 @@ def run_jvm(cp, work, data, a, cores):
 
 
 def tail(lat):
-    """Highest percentile with at least 10 samples beyond it (the minimum
-    when there are 10 samples or fewer): (value, percentile, beyond)."""
+    """Tail latency: (value, percentile, samples beyond it).
+
+    With 100 ops or more: the highest percentile with at least 10
+    samples beyond it. A shorter run has no such percentile at or above
+    p90 (and with 20 ops or fewer none above the median), so it gives
+    p90, interpolated between the two nearest samples."""
     s = sorted(lat)
-    k = max(0, len(s) - 11)
-    return s[k], 100.0 * (k + 1) / len(s), len(s) - 1 - k
+    n = len(s)
+    if n >= 100:
+        k = n - 11
+        return s[k], 100.0 * (k + 1) / n, n - 1 - k
+    pos = 0.9 * (n - 1)
+    lo = int(pos)
+    hi = min(lo + 1, n - 1)
+    return s[lo] + (pos - lo) * (s[hi] - s[lo]), 90.0, n - 1 - lo
 
 
 def end_to_end(rec):
@@ -165,13 +174,15 @@ def end_to_end(rec):
         "latency_p50_s": statistics.median(lat),
         "latency_tail_s": value,
         "input_per_s": units / run["timed_s"],
-        "cpu_s_per_op": statistics.median(o["cpu_s"] for o in ops),
+        "cpu_s_per_op": sum(o["cpu_s"] for o in ops) / len(ops),
         "setup_s": statistics.median(rec["setup_s"]),
         "heap_peak_mb": run["heap_peak_mb"],
     }
     return metrics, {"tail_percentile": pct, "tail_samples_beyond": beyond,
                      "ops": len(ops), "steal_share": run["steal_share"],
-                     "latencies_s": lat, "heap_mb": run.get("heap_mb")}
+                     "latencies_s": lat, "cpu_s": [o["cpu_s"] for o in ops],
+                     "jit_s": [o["jit_s"] for o in ops],
+                     "heap_mb": run.get("heap_mb")}
 
 
 def _mean(xs):
@@ -267,15 +278,10 @@ def per_layer(rec, spans_path, cores):
     m.update({f"functions.{k}.rows_per_s": v
               for k, v in rec.get("kernels", {}).items()})
     probes = rec.get("probes", {})
-    if "queries" in probes:
-        q = probes["queries"]
-        m.update({"entry.construct_s": _mean(x["construct_s"] for x in q),
-                  "catalyst.plan_s": _mean(x["plan_s"] for x in q),
-                  "exec.execute_s": _mean(x["execute_s"] for x in q)})
-    else:
-        m.update({"entry.construct_s": span_s("entry.construct"),
-                  "catalyst.plan_s": span_s("catalyst.plan"),
-                  "exec.execute_s": span_s("exec.execute")})
+    q = probes["queries"]
+    m.update({"entry.construct_s": _mean(x["construct_s"] for x in q),
+              "catalyst.plan_s": _mean(x["plan_s"] for x in q),
+              "exec.execute_s": _mean(x["execute_s"] for x in q)})
     if "tick" in probes:
         t = probes["tick"]
         m.update(engine_layers([t], t["run_alerts_s"]))
@@ -289,12 +295,7 @@ def per_layer(rec, spans_path, cores):
                 if s.get("stream_run_id")}
         m.update(stream_layers([r for r in records if r["kind"] == "progress"
                                 and r["run_id"] in runs], ops))
-    if "corpus" in probes:
-        m.update(corpus_layers(probes["corpus"]))
-    else:
-        m.update(corpus_layers(dict(
-            rec.get("extras", {}), **{k: span_s(k[:-2]) for k in (
-                "corpus.curate_s", "dedup.clusters_s", "ann.ivf_pq_s")})))
+    m.update(corpus_layers(probes["corpus"]))
     return m, reduce.layer_table(spans)
 
 
@@ -310,8 +311,6 @@ def main():
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--keep", action="store_true",
-                    help="keep the run directory (inputs, logs, spans)")
     a = ap.parse_args()
 
     root = os.getcwd()
@@ -329,8 +328,7 @@ def main():
     rec = run_jvm(cp, work, data, a, cores)
 
     ops = rec["run"]["ops"]
-    bad = checks.failed_ops(a.workload, ops, data, work,
-                            f"{root}/{BUILD_DIR}/oracle-cache")
+    bad = checks.failed_ops(a.workload, ops, data)
     e2e, info = end_to_end(rec)
     record = {"workload": a.workload, "seed": a.seed, "trace": a.trace,
               "host": dict(rec["host"], heap=heap()), "end_to_end": e2e,
@@ -347,9 +345,9 @@ def main():
     with open(f"{root}/{BUILD_DIR}/results/"
               f"{a.workload}-s{a.seed}-t{a.trace}.json", "w") as fh:
         json.dump(record, fh, indent=1)
-    print(json.dumps(record["host"]), file=sys.stderr)
-    if not a.keep:
-        shutil.rmtree(work, ignore_errors=True)
+    print(json.dumps(dict(record["host"], steal_share=info["steal_share"])),
+          file=sys.stderr)
+    shutil.rmtree(work, ignore_errors=True)
     print(json.dumps({"correct": not bad, "attempted": len(ops),
                       "failed": len(bad), "metrics": metrics}))
 

@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   * drives it and owns the checks and the metric arithmetic.
   *
   *   perfbench.Main --workload W --data DIR --work DIR --seconds S
-  *     --trace 0|1 --cores N --seed N [--costs FILE]
+  *     --trace 0|1 --cores N --seed N
   *
   * A traced run also runs the function-kernel bench and one-shot probes
   * of the layers its workload does not exercise, on `DATA/probe`.
@@ -33,7 +33,7 @@ object Main {
     val cores = a("cores").toInt
     val seed = a("seed").toLong
 
-    val workload = Workloads(name, seed, a.getOrElse("costs", ""))
+    val workload = Workloads(name)
     var spark: SparkSession = null
     val setupS = (0 until Setups).map { k =>
       if (spark != null) spark.stop()
@@ -55,7 +55,8 @@ object Main {
     // settle: untimed ops while the JIT compiles the hot paths (the first
     // ops after set-up run slower than later ones). A fixed count, so the
     // timed loop starts at the same point of the input sequence each run.
-    loop(workload, Double.MaxValue, traced = false, maxOps = workload.settleOps)
+    loop(workload, Double.MaxValue, traced = false, maxOps = workload.settleOps,
+      heapEveryS = Double.PositiveInfinity)
     if (traced) Trace.attach(spark)
     // a traced run alternates traced and untraced ops (the untraced ones
     // give the tracing overhead at the same warm-up stage), so it runs
@@ -67,11 +68,9 @@ object Main {
       ListenerBus.drain(spark.sparkContext)
       Trace.write(s"$work/spans.jsonl")
       record("kernels") = KernelBench.run(spark)
-      record("extras") = workload.layerExtras()
       record("probes") = Probes.run(spark, name, s"${a("data")}/probe",
         Workloads.mkdirs(s"$work/probe"))
     }
-    record("finish") = workload.finish(work)
     Files.writeString(Paths.get(s"$work/record.json"), Json.write(record))
     spark.stop()
   }
@@ -94,17 +93,18 @@ object Main {
     s
   }
 
-  /** Op index across loops: a workload's input sequence (days, suite
-    * order, arrival batches) continues from the settle loop. */
+  /** Op index across loops: a workload's input sequence (windows, arrival
+    * batches) continues from the settle loop. */
   private var nextOp = 0
 
   /** Closed loop, one client: ops run back to back until their summed
     * wall time reaches `seconds`. Per op: wall time, process CPU, GC and
     * JIT time. Heap in use is sampled after a forced GC (outside the
-    * timed section) about every three seconds of op time. With `traced`,
-    * every second op records spans. At most `maxOps` ops. */
+    * timed section) before the first op, after the last, and about every
+    * `heapEveryS` seconds of op time. With `traced`, every second op
+    * records spans. At most `maxOps` ops. */
   private def loop(w: Workload, seconds: Double, traced: Boolean,
-      maxOps: Int = Int.MaxValue): Map[String, Any] = {
+      maxOps: Int = Int.MaxValue, heapEveryS: Double = 3.0): Map[String, Any] = {
     val os = ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     val gcs = ManagementFactory.getGarbageCollectorMXBeans.asScala
@@ -114,13 +114,17 @@ object Main {
     // the working set), then two collections with a pause between: the
     // first clears the weak references the ContextCleaner watches, the
     // cleaner then drops the blocks (broadcasts, shuffles) they held,
-    // the second frees them
+    // the second frees them. The cleaner runs on its own thread and now
+    // and then lags a round (one reading in six runs came out 70 MB
+    // high), so a sample is the lower of two such readings.
     def heapAfterGc(): Double = {
       ListenerBus.drain(SparkSession.active.sparkContext)
-      System.gc()
-      Thread.sleep(100)
-      System.gc()
-      ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
+      Seq.fill(2) {
+        System.gc()
+        Thread.sleep(100)
+        System.gc()
+        ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
+      }.min
     }
     val ops = mutable.ArrayBuffer.empty[Map[String, Any]]
     val heap = mutable.ArrayBuffer(heapAfterGc())
@@ -153,7 +157,7 @@ object Main {
       ops += rec ++ out
       timed += lat
       sinceGc += lat
-      if (sinceGc >= 3.0) { heap += heapAfterGc(); sinceGc = 0.0 }
+      if (sinceGc >= heapEveryS) { heap += heapAfterGc(); sinceGc = 0.0 }
       i += 1
     }
     nextOp = i

@@ -2,7 +2,8 @@ package perfbench
 
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.time.LocalDate
+import java.time.{LocalDateTime, ZoneOffset}
+import java.time.format.DateTimeFormatter
 
 import scala.jdk.CollectionConverters._
 
@@ -32,17 +33,11 @@ trait Workload {
   def hasNext: Boolean = true
   def op(i: Int): Unit
   def after(i: Int): Map[String, Any]
-  /** End of run, untimed: output dumps for the checks. */
-  def finish(out: String): Map[String, Any] = Map.empty
-  /** Traced runs only, untimed: layer counts the timed path cannot see. */
-  def layerExtras(): Map[String, Any] = Map.empty
 }
 
 object Workloads {
-  def apply(name: String, seed: Long, costs: String): Workload = name match {
+  def apply(name: String): Workload = name match {
     case "alert_tick" => new AlertTick
-    case "query_suite" => new QuerySuite(seed, costs)
-    case "corpus_build" => new CorpusBuild
     case "stream_ingest" => new StreamIngest
     case other => throw new IllegalArgumentException(s"unknown workload $other")
   }
@@ -61,12 +56,20 @@ object Workloads {
   }
 }
 
-/** Scheduled alert ticks: `Runner.runAlerts` over one day of a
-  * date-partitioned event history per tick, cycling through the days. */
+/** Scheduled alert ticks: `Runner.runAlerts` over a one-day window of a
+  * date-partitioned event history per tick. The window slides by
+  * `StepHours` a tick, as a scheduler's would, so the settle and timed
+  * ticks never repeat a window (nor the window's literals in the
+  * generated code) until it wraps round after the last window inside the
+  * history. */
 final class AlertTick(warmTicks: Int = 1) extends Workload {
-  val settleOps = 3
+  val settleOps = 5
+  /** Days of history: `TICK_DAYS` in `perfbench/gen.py`. */
   private val Days = 7
-  private val Day0 = LocalDate.of(2024, 1, 1)
+  private val StepHours = 6
+  private val Windows = (Days - 1) * 24 / StepHours + 1
+  private val Start = LocalDateTime.of(2024, 1, 1, 0, 0)
+  private val Fmt = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
   private var events: DataFrame = _
   private var last: (RunLog, Runner.AlertRunResult, String) = _
 
@@ -107,9 +110,9 @@ final class AlertTick(warmTicks: Int = 1) extends Workload {
   }
 
   private def window(i: Int): (String, String, Long) = {
-    val d = Day0.plusDays(i % Days)
-    val end = d.plusDays(1)
-    (s"$d 00:00:00", s"$end 00:00:00", end.toEpochDay * 86400L)
+    val from = Start.plusHours((i % Windows).toLong * StepHours)
+    val to = from.plusDays(1)
+    (from.format(Fmt), to.format(Fmt), to.toEpochSecond(ZoneOffset.UTC))
   }
 
   def op(i: Int): Unit = {
@@ -131,9 +134,10 @@ final class AlertTick(warmTicks: Int = 1) extends Workload {
     res.handlerResults.unpersist(blocking = true)
     val rows = log.entries
     def row(n: String) = rows.find(_.query_name == n)
-    val (from, _, _) = window(i)
+    val (from, to, _) = window(i)
     Map(
-      "day" -> from.take(10),
+      "from" -> from,
+      "to" -> to,
       "rules" -> rules.map(r => r.name -> row(r.name).map(_.inserted).getOrElse(-1L)).toMap,
       "merged" -> row("alert_merge").map(_.inserted).getOrElse(-1L),
       "suppressed" -> row(suppressions.head.name).map(_.suppressed).getOrElse(-1L),
@@ -142,145 +146,6 @@ final class AlertTick(warmTicks: Int = 1) extends Workload {
       "sent" -> sent,
       "record_status_s" -> row("alert_dispatch").map(_.duration_s).getOrElse(0.0),
       "errors" -> rows.flatMap(_.error).size)
-  }
-}
-
-/** Every `SparkEntry.queries` entry once per pass, in a seed-shuffled
-  * order; one op is one query: construct, plan, execute (noop writer).
-  *
-  * The order is stratified so that any prefix of a pass holds the same
-  * mix of cheap and costly entries whatever the seed: entries are ranked
-  * by a pinned per-query cost (`perfbench/query_costs.tsv`; an entry not
-  * listed counts as the median), cut into strata, shuffled within each
-  * stratum by the seed, and dealt one per stratum in bit-reversed
-  * stratum order. */
-final class QuerySuite(seed: Long, costsFile: String) extends Workload {
-  val settleOps = 10
-  private val Strata = 32
-  val order: IndexedSeq[String] = QuerySuite.order(
-    SparkEntry.queries.keys.toIndexedSeq.sorted, QuerySuite.costs(costsFile),
-    Strata, seed)
-  private var c: Ctx = _
-  private val ran = scala.collection.mutable.LinkedHashSet.empty[String]
-
-  def setup(ctx: Ctx): Unit = {
-    c = ctx
-    // input registration (footer reads, cached per session) and a
-    // generic warm-up over the inputs that no suite entry shares
-    Tables.names.foreach(n => Tables.t(c.spark, c.data, n))
-    val li = Tables.t(c.spark, c.data, "lineitem")
-    li.groupBy(col("l_returnflag")).agg(sum(col("l_quantity"))).collect()
-    li.join(Tables.t(c.spark, c.data, "orders"),
-      col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_orderpriority")).count().collect()
-  }
-
-  private def name(i: Int) = order(i % order.size)
-
-  def op(i: Int): Unit = {
-    val q = name(i)
-    val df = Trace.span("entry.construct")(SparkEntry.queries(q)(c.spark, c.data))
-    Trace.span("catalyst.plan")(df.queryExecution.executedPlan)
-    Trace.span("exec.execute")(df.write.mode("overwrite").format("noop").save())
-  }
-
-  def after(i: Int): Map[String, Any] = {
-    ran += name(i)
-    Map("units" -> 1L, "query" -> name(i))
-  }
-
-  override def finish(out: String): Map[String, Any] = {
-    val dumped = ran.toSeq.flatMap { q =>
-      try {
-        SparkEntry.queries(q)(c.spark, c.data).write.mode("overwrite")
-          .parquet(s"$out/qout/$q")
-        Some(q)
-      } catch { case _: Exception => None }
-    }
-    val oracle = SparkEntry.oracleSql
-    Files.writeString(Paths.get(s"$out/oracle_sql.json"),
-      Json.write(dumped.flatMap(q => oracle.get(q).map(q -> _)).toMap))
-    Map("dumped" -> dumped)
-  }
-}
-
-object QuerySuite {
-  def costs(path: String): Map[String, Double] =
-    scala.io.Source.fromFile(path).getLines()
-      .filterNot(_.startsWith("#")).map(_.split("\t"))
-      .collect { case Array(q, c) => q -> c.toDouble }.toMap
-
-  /** Bit-reversal permutation of 0 until n: every prefix is spread
-    * evenly over the range. */
-  def bitReversed(n: Int): Seq[Int] = {
-    val bits = math.max(1, 32 - Integer.numberOfLeadingZeros(n - 1))
-    (0 until (1 << bits)).map(i => Integer.reverse(i) >>> (32 - bits)).filter(_ < n)
-  }
-
-  def order(names: IndexedSeq[String], costs: Map[String, Double],
-      strata: Int, seed: Long): IndexedSeq[String] = {
-    val known = names.flatMap(costs.get).sorted
-    val median = if (known.isEmpty) 0.0 else known(known.size / 2)
-    val ranked = names.sortBy(q => (costs.getOrElse(q, median), q))
-    val s = math.min(strata, ranked.size)
-    val rnd = new scala.util.Random(seed)
-    val cut = (0 until s).map(i =>
-      rnd.shuffle(ranked.slice(i * ranked.size / s, (i + 1) * ranked.size / s)))
-    val deal = bitReversed(s)
-    (0 until cut.map(_.size).max).flatMap(k =>
-      deal.flatMap(i => cut(i).lift(k)))
-  }
-}
-
-/** One training-data build per op: curation run, near-dup clusters,
-  * IVF-PQ build and search. */
-final class CorpusBuild extends Workload {
-  val settleOps = 1
-  private var c: Ctx = _
-  private var last = Map.empty[String, Any]
-
-  def setup(ctx: Ctx): Unit = {
-    c = ctx
-    Tables.t(c.spark, c.data, "documents")
-    Tables.t(c.spark, c.data, "embeddings")
-    op(0)
-    after(0)
-  }
-
-  def op(i: Int): Unit = {
-    val (_, census) = Trace.span("corpus.curate")(CorpusPipeline.run(c.spark, c.data))
-    val clusters = Trace.span("dedup.clusters")(
-      Dedup.dedupClusters(c.spark, c.data).collect())
-    val ann = Trace.span("ann.ivf_pq")(
-      Ann.ivfPqAnn(c.spark, c.data, probeId = (i % 1000).toLong).collect())
-    last = Map(
-      "units" -> census.ingested,
-      "census" -> Seq(census.ingested, census.quality, census.deduped, census.capped),
-      "cluster_rows" -> clusters.length.toLong,
-      "clusters" -> clusters.map(_.getAs[Long]("cluster")).distinct.length.toLong,
-      "ann_rows" -> ann.length.toLong)
-  }
-
-  def after(i: Int): Map[String, Any] = last
-
-  override def layerExtras(): Map[String, Any] = CorpusBuild.pairs(c.spark, c.data)
-}
-
-object CorpusBuild {
-  /** LSH candidate and Jaccard-verified pair counts of the corpus. */
-  def pairs(spark: SparkSession, data: String): Map[String, Any] = Map(
-    "candidate_pairs" ->
-      Dedup.lshCandidates(Dedup.minhashSignatures(spark, data)).count(),
-    "verified_pairs" -> Dedup.lshPairs(spark, data).count())
-
-  /** One build's layers timed once, for workloads whose loop does not
-    * build a corpus (seconds per layer). */
-  def probe(spark: SparkSession, data: String): Map[String, Double] = {
-    import Workloads.secs
-    Map(
-      "corpus.curate_s" -> secs(CorpusPipeline.run(spark, data)),
-      "dedup.clusters_s" -> secs(Dedup.dedupClusters(spark, data).collect()),
-      "ann.ivf_pq_s" -> secs(Ann.ivfPqAnn(spark, data).collect()))
   }
 }
 
@@ -370,8 +235,9 @@ final class StreamIngest(warmCycles: Int = 1) extends Workload {
 }
 
 /** One-shot probes, in traced runs, of the layers a workload's own loop
-  * does not exercise, on the small inputs under `DATA/probe`: each
-  * probe is one op of the workload that owns the layer. */
+  * does not exercise, on the small inputs under `DATA/probe`: three
+  * `SparkEntry` queries (construct, plan, execute), one corpus build
+  * with its dedup pair counts, and one op of the other workload. */
 object Probes {
   import Workloads.secs
 
@@ -381,22 +247,26 @@ object Probes {
       tmp: String): Map[String, Any] = {
     val ctx = new Ctx(spark, dir, tmp)
     val out = scala.collection.mutable.LinkedHashMap.empty[String, Any]
-    if (workload != "query_suite")
-      out("queries") = Queries.filter(SparkEntry.queries.contains).map { q =>
-        var df: DataFrame = null
-        Map("construct_s" -> secs { df = SparkEntry.queries(q)(spark, dir) },
-          "plan_s" -> secs(df.queryExecution.executedPlan),
-          "execute_s" -> secs(df.write.mode("overwrite").format("noop").save()))
-      }
-    if (workload != "corpus_build")
-      out("corpus") = CorpusBuild.probe(spark, dir) ++ CorpusBuild.pairs(spark, dir)
-    if (workload != "alert_tick") {
+    out("queries") = Queries.filter(SparkEntry.queries.contains).map { q =>
+      var df: DataFrame = null
+      Map("construct_s" -> secs { df = SparkEntry.queries(q)(spark, dir) },
+        "plan_s" -> secs(df.queryExecution.executedPlan),
+        "execute_s" -> secs(df.write.mode("overwrite").format("noop").save()))
+    }
+    out("corpus") = Map(
+      "corpus.curate_s" -> secs(CorpusPipeline.run(spark, dir)),
+      "dedup.clusters_s" -> secs(Dedup.dedupClusters(spark, dir).collect()),
+      "ann.ivf_pq_s" -> secs(Ann.ivfPqAnn(spark, dir).collect()),
+      "candidate_pairs" ->
+        Dedup.lshCandidates(Dedup.minhashSignatures(spark, dir)).count(),
+      "verified_pairs" -> Dedup.lshPairs(spark, dir).count())
+    if (workload == "stream_ingest") {
       val t = new AlertTick(warmTicks = 0)
       t.setup(ctx)
       val took = secs(t.op(0))
       out("tick") = t.after(0) + ("run_alerts_s" -> took)
     }
-    if (workload != "stream_ingest") {
+    if (workload == "alert_tick") {
       val st = new StreamIngest(warmCycles = 0)
       st.setup(ctx)
       st.before(0)

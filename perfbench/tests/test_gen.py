@@ -43,12 +43,6 @@ class GenTest(unittest.TestCase):
     def test_stream_ingest(self):
         self.check("stream_ingest")
 
-    def test_query_suite(self):
-        self.check("query_suite")
-
-    def test_corpus_build(self):
-        self.check("corpus_build")
-
 
 if __name__ == "__main__":
     unittest.main()

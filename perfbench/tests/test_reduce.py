@@ -74,9 +74,12 @@ class TailTest(unittest.TestCase):
         lat = list(range(1, 101))
         self.assertEqual(run.tail(lat), (90, 90.0, 10))
 
-    def test_tail_of_a_short_run_is_its_minimum(self):
-        self.assertEqual(run.tail([3.0, 1.0, 2.0])[0], 1.0)
-
+    def test_tail_of_a_short_run_is_its_p90(self):
+        self.assertEqual(run.tail([3.0, 1.0, 2.0]), (2.8, 90.0, 1))
+        value, pct, beyond = run.tail(list(range(1, 12)))
+        self.assertAlmostEqual(value, 10.0)
+        self.assertEqual((pct, beyond), (90.0, 1))
+        self.assertEqual(run.tail([5.0]), (5.0, 90.0, 0))
 
 if __name__ == "__main__":
     unittest.main()
