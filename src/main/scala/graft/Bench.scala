@@ -147,13 +147,15 @@ object Bench {
             val m = i.taskMetrics
             // spill + shuffle volumes ride the trace line so a scale run
             // can check §5 spill hygiene without the UI (trace mode only;
-            // the timed path and the JSON contract are untouched)
+            // the timed path and the JSON contract are untouched); a
+            // stage that ran no task carries no metrics
+            val volumes = if (m == null) "" else
+              s"spillM=${m.memoryBytesSpilled} spillD=${m.diskBytesSpilled} " +
+                s"shW=${m.shuffleWriteMetrics.bytesWritten} " +
+                s"shR=${m.shuffleReadMetrics.totalBytesRead} "
             System.err.println(s"[stage] ${i.stageId} " +
               s"${i.completionTime.getOrElse(0L) - i.submissionTime.getOrElse(0L)} ms " +
-              s"tasks=${i.numTasks} " +
-              s"spillM=${m.memoryBytesSpilled} spillD=${m.diskBytesSpilled} " +
-              s"shW=${m.shuffleWriteMetrics.bytesWritten} " +
-              s"shR=${m.shuffleReadMetrics.totalBytesRead} " +
+              s"tasks=${i.numTasks} " + volumes +
               s"${i.name.split("\n")(0).take(60)}")
           }
         })
@@ -204,11 +206,18 @@ object Bench {
     // steal relative to whole-host CPU capacity over the timed section
     // (jiffies are 100 Hz summed across all host CPUs), the same
     // normalization tools/bench_pair.py uses for its calm-gate budget.
-    val hostCpus = Runtime.getRuntime.availableProcessors
+    // The CPU count is the host's cpuN lines, the CPUs the steal jiffies
+    // are summed over — not availableProcessors, which a cgroup quota or
+    // affinity mask can shrink below them.
+    val hostCpus = try {
+      Files.readAllLines(Paths.get("/proc/stat")).stream()
+        .filter(_.matches("cpu\\d+\\s.*")).count().toInt
+    } catch { case _: Throwable => 0 }
     val stealJ = if (stealStart >= 0 && stealEnd >= 0) stealEnd - stealStart
                  else -1L
     val stealPct =
-      if (stealJ >= 0 && wallS > 0) stealJ / (wallS * 100.0 * hostCpus) * 100.0
+      if (stealJ >= 0 && wallS > 0 && hostCpus > 0)
+        stealJ / (wallS * 100.0 * hostCpus) * 100.0
       else -1.0
     val stealQs = perQuerySteal.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")

@@ -86,13 +86,16 @@ object Dedup {
   def lshCandidates(sig: DataFrame): DataFrame = {
     // Band keys are xxhash64 LONGS over (band-index, slice, slice) — the
     // bucket is a pure grouping key that never reaches any output (the
-    // downstream self-join emits verified doc pairs only), so any
-    // injective keying agrees with the oracle's md5-string buckets; the
-    // same invariance argument the shingle sets already rely on, where a
-    // collision would even reach the output counts. 8-byte keys halve
-    // the banding exchange — the dedup family's single largest shuffle
-    // (docs-1000x trace: 2.2 GB per pass, zero spill) — and drop four
-    // md5 string kernels per doc (guide §2.3 "narrower types").
+    // downstream self-join emits verified doc pairs only). The keys are
+    // collision-resistant, not injective: a collision merges two
+    // buckets, and output still agrees with the oracle's md5-string
+    // buckets because every spurious candidate from the merge must pass
+    // the exact-Jaccard verify like any other (the residual risk, a
+    // merge tipping a bucket over MaxBucket, needs a collision: at most
+    // ~n²/2⁶⁵ odds over n band keys). 8-byte keys halve the banding
+    // exchange — the dedup family's single largest shuffle (docs-1000x
+    // trace: 2.2 GB per pass, zero spill) — and drop four md5 string
+    // kernels per doc (guide §2.3 "narrower types").
     val bands = sig.select(col("doc_id"), explode(array(
       xxhash64(lit(0), col("mh0"), col("mh1")),
       xxhash64(lit(1), col("mh2"), col("mh3")),
@@ -174,8 +177,10 @@ object Dedup {
     "spark.graft.dedup.pruneMinInputBytes"
 
   private[graft] def pruneGate(docs: DataFrame): Boolean = {
-    val thresh = docs.sparkSession.conf
-      .get(PruneMinInputBytes, (256L << 20).toString).toLong
+    val raw = docs.sparkSession.conf
+      .get(PruneMinInputBytes, (256L << 20).toString)
+    val thresh = raw.toLongOption.getOrElse(throw new IllegalArgumentException(
+      s"$PruneMinInputBytes must be a whole number of bytes, got '$raw'"))
     docs.queryExecution.optimizedPlan.stats.sizeInBytes >= BigInt(thresh)
   }
 

@@ -2,13 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.{CosineSimilarity, DistinctGramHashes, DistinctGrams,
-  DistinctShingles, DistinctWordGramHashes, FastMd5, MinGramMd5,
-  MinhashSlices, SimHash32, VectorSum, WordGramHashes,
-  BpeTokenCount, PHash32, DupRunBits}
+import graft.functions.{CosineSimilarity, DistinctGramHashes,
+  DistinctWordGramHashes, FastMd5, MinGramMd5, MinhashSlices, SimHash32,
+  VectorSum, WordGramHashes, BpeTokenCount, PHash32, DupRunBits}
 
 /** Session-extension registration for graft's native Catalyst
   * expressions, so the SQL-AUTHORED rule surface reaches the same fused
@@ -27,110 +27,65 @@ import graft.functions.{CosineSimilarity, DistinctGramHashes, DistinctGrams,
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
+  override def apply(e: SparkSessionExtensions): Unit =
+    for (f <- GraftExtensions.functions)
+      e.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, f.name,
+          f.usage, ""),
+        (args: Seq[Expression]) => {
+          require(args.length == f.arity, s"${f.name} expects ${f.arity} " +
+            s"argument${if (f.arity == 1) "" else "s"}, got ${args.length}")
+          f.build(args)
+        }))
+}
 
-  private def one(args: Seq[Expression], name: String): Expression = {
-    require(args.length == 1, s"$name expects 1 argument, got ${args.length}")
-    args.head
+object GraftExtensions {
+
+  /** One SQL function: name, usage line, argument count, builder. */
+  final case class Fn(name: String, usage: String, arity: Int,
+      build: Seq[Expression] => Expression)
+
+  private def stringLiteral(e: Expression): String = e match {
+    case Literal(v: UTF8String, StringType) => v.toString
+    case other => throw new IllegalArgumentException(
+      s"variant must be a string literal, got $other")
   }
 
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("graft_cosine_sim"),
-      info("graft_cosine_sim",
-        "graft_cosine_sim(a, b) - fused one-pass cosine similarity " +
-          "over two double arrays"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          s"graft_cosine_sim expects 2 arguments, got ${args.length}")
-        CosineSimilarity(args(0), args(1))
-      }))
-    e.injectFunction((FunctionIdentifier("graft_md5"),
-      info("graft_md5",
-        "graft_md5(s) - md5 hex via a thread-local digest (no " +
-          "per-row allocation)"),
-      (args: Seq[Expression]) => FastMd5(one(args, "graft_md5"))))
-    e.injectFunction((FunctionIdentifier("graft_min_gram_md5"),
-      info("graft_min_gram_md5",
-        "graft_min_gram_md5(s) - minimum md5 over the string's " +
-          "char-5-grams in one pass (winnowing fingerprint)"),
-      (args: Seq[Expression]) =>
-        MinGramMd5(one(args, "graft_min_gram_md5"), 5)))
-    e.injectFunction((FunctionIdentifier("graft_minhash_slices"),
-      info("graft_minhash_slices",
-        "graft_minhash_slices(s) - 8 minhash slice minima over word " +
-          "shingles in one fold"),
-      (args: Seq[Expression]) =>
-        MinhashSlices(one(args, "graft_minhash_slices"))))
-    e.injectFunction((FunctionIdentifier("graft_distinct_shingles"),
-      info("graft_distinct_shingles",
-        "graft_distinct_shingles(s) - distinct word-trigram shingles " +
-          "as an array"),
-      (args: Seq[Expression]) =>
-        DistinctShingles(one(args, "graft_distinct_shingles"))))
-    e.injectFunction((FunctionIdentifier("graft_distinct_grams"),
-      info("graft_distinct_grams",
-        "graft_distinct_grams(s) - distinct char-4-grams as an array"),
-      (args: Seq[Expression]) =>
-        DistinctGrams(one(args, "graft_distinct_grams"), 4)))
-    e.injectFunction((FunctionIdentifier("graft_simhash32"),
-      info("graft_simhash32",
-        "graft_simhash32(s) - 32-bit token-frequency SimHash of the " +
-          "document in one pass"),
-      (args: Seq[Expression]) => SimHash32(one(args, "graft_simhash32"))))
-    e.injectFunction((FunctionIdentifier("graft_distinct_gram_hashes"),
-      info("graft_distinct_gram_hashes",
-        "graft_distinct_gram_hashes(s) - distinct char-4-gram " +
-          "xxhash64 longs as an array"),
-      (args: Seq[Expression]) =>
-        DistinctGramHashes(one(args, "graft_distinct_gram_hashes"), 4)))
-    e.injectFunction((FunctionIdentifier("graft_distinct_word_gram_hashes"),
-      info("graft_distinct_word_gram_hashes",
-        "graft_distinct_word_gram_hashes(s, variant) - distinct " +
-          "word-4-gram hashes ('md5' hex or 'xxhash64' longs) as an " +
-          "array"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          s"graft_distinct_word_gram_hashes expects 2 arguments, " +
-            s"got ${args.length}")
-        val variant = args(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(
-            v: org.apache.spark.unsafe.types.UTF8String, StringType) =>
-            v.toString
-          case other => throw new IllegalArgumentException(
-            s"variant must be a string literal, got $other")
-        }
-        DistinctWordGramHashes(args(0), 4, variant)
-      }))
-    e.injectFunction((FunctionIdentifier("graft_word_gram_hashes"),
-      info("graft_word_gram_hashes",
-        "graft_word_gram_hashes(s) - POSITIONAL word-4-gram xxhash64 " +
-          "longs (document order, duplicates kept; the span-analysis " +
-          "sibling of the distinct variant)"),
-      (args: Seq[Expression]) =>
-        WordGramHashes(one(args, "graft_word_gram_hashes"), 4)))
-    e.injectFunction((FunctionIdentifier("graft_vector_sum"),
-      info("graft_vector_sum",
-        "graft_vector_sum(v) - aggregate: elementwise sum of " +
-          "array<double> vectors (map-side partial buffers; the " +
-          "de-exploded centroid shape)"),
-      (args: Seq[Expression]) => VectorSum(one(args, "graft_vector_sum"))))
-    e.injectFunction((FunctionIdentifier("graft_bpe_token_count"),
-      info("graft_bpe_token_count",
-        "graft_bpe_token_count(s) - count of [a-z]+|[0-9]+|[^a-z0-9 ] " +
-          "tokens in one code-point pass (no regex engine)"),
-      (args: Seq[Expression]) =>
-        BpeTokenCount(one(args, "graft_bpe_token_count"))))
-    e.injectFunction((FunctionIdentifier("graft_phash32"),
-      info("graft_phash32",
-        "graft_phash32(b) - 32-bit byte-domain dHash of a binary " +
-          "payload (33 evenly-spaced samples, bit = sample > next)"),
-      (args: Seq[Expression]) => PHash32(one(args, "graft_phash32"))))
-    e.injectFunction((FunctionIdentifier("graft_dup_run_bits"),
-      info("graft_dup_run_bits",
-        "graft_dup_run_bits(pos) - aggregate: [n_dup, max_run] over " +
-          "duplicated-window positions via a per-group bitmap"),
-      (args: Seq[Expression]) =>
-        DupRunBits(one(args, "graft_dup_run_bits"))))
-  }
+  val functions: Seq[Fn] = Seq(
+    Fn("graft_cosine_sim", "graft_cosine_sim(a, b) - fused one-pass " +
+      "cosine similarity over two double arrays", 2,
+      a => CosineSimilarity(a(0), a(1))),
+    Fn("graft_md5", "graft_md5(s) - md5 hex via a thread-local digest " +
+      "(no per-row allocation)", 1, a => FastMd5(a(0))),
+    Fn("graft_min_gram_md5", "graft_min_gram_md5(s) - minimum md5 over " +
+      "the string's char-5-grams in one pass (winnowing fingerprint)", 1,
+      a => MinGramMd5(a(0), 5)),
+    Fn("graft_minhash_slices", "graft_minhash_slices(s) - 8 minhash " +
+      "slice minima over word shingles in one fold", 1,
+      a => MinhashSlices(a(0))),
+    Fn("graft_simhash32", "graft_simhash32(s) - 32-bit token-frequency " +
+      "SimHash of the document in one pass", 1, a => SimHash32(a(0))),
+    Fn("graft_distinct_gram_hashes", "graft_distinct_gram_hashes(s) - " +
+      "distinct char-4-gram xxhash64 longs as an array", 1,
+      a => DistinctGramHashes(a(0), 4)),
+    Fn("graft_distinct_word_gram_hashes",
+      "graft_distinct_word_gram_hashes(s, variant) - distinct " +
+        "word-4-gram hashes ('md5' hex or 'xxhash64' longs) as an array", 2,
+      a => DistinctWordGramHashes(a(0), 4, stringLiteral(a(1)))),
+    Fn("graft_word_gram_hashes", "graft_word_gram_hashes(s) - POSITIONAL " +
+      "word-4-gram xxhash64 longs (document order, duplicates kept; the " +
+      "span-analysis sibling of the distinct variant)", 1,
+      a => WordGramHashes(a(0), 4)),
+    Fn("graft_vector_sum", "graft_vector_sum(v) - aggregate: elementwise " +
+      "sum of array<double> vectors (map-side partial buffers; the " +
+      "de-exploded centroid shape)", 1, a => VectorSum(a(0))),
+    Fn("graft_bpe_token_count", "graft_bpe_token_count(s) - count of " +
+      "[a-z]+|[0-9]+|[^a-z0-9 ] tokens in one code-point pass (no regex " +
+      "engine)", 1, a => BpeTokenCount(a(0))),
+    Fn("graft_phash32", "graft_phash32(b) - 32-bit byte-domain dHash of " +
+      "a binary payload (33 evenly-spaced samples, bit = sample > next)", 1,
+      a => PHash32(a(0))),
+    Fn("graft_dup_run_bits", "graft_dup_run_bits(pos) - aggregate: " +
+      "[n_dup, max_run] over duplicated-window positions via a per-group " +
+      "bitmap", 1, a => DupRunBits(a(0))))
 }

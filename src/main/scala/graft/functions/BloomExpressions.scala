@@ -1,11 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftexpr
-import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
+import org.apache.spark.sql.types.{BooleanType, DataType}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Codegen'd membership probe against a driver-built
@@ -18,30 +16,13 @@ import org.apache.spark.util.sketch.BloomFilter
   * call inside the generated consume path.
   */
 case class BloomMightContain(child: Expression, bf: BloomFilter)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a bigint hash column, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = BooleanType
-
-  override def nullIntolerant: Boolean = true
-
+    extends UnaryKernel {
   override def prettyName: String = "bloom_might_contain"
-
-  override protected def nullSafeEval(h: Any): Any =
-    bf.mightContainLong(h.asInstanceOf[Long])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomFilter", bf,
-      "org.apache.spark.util.sketch.BloomFilter")
-    defineCodeGen(ctx, ev, c => s"$ref.mightContainLong($c)")
-  }
-
+  override protected def accepts = StaticKernel.Hashes
+  override def dataType: DataType = BooleanType
+  override protected def forwarder =
+    "org.apache.spark.util.sketch.BloomFilter.mightContainLong"
+  override protected def planArgs = Seq("bloomFilter" -> bf)
   override protected def withNewChildInternal(
       newChild: Expression): BloomMightContain = copy(child = newChild)
 }

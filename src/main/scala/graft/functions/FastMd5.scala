@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftexpr
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -166,42 +164,6 @@ object Md5Util {
       mins.map(UTF8String.fromBytes(_)).asInstanceOf[Array[Any]])
   }
 
-  /** Distinct 3-word shingles (insertion order; see DistinctShingles). */
-  def distinctShingles(s: UTF8String): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val words = s.toString.split(" ", -1)
-    val n = words.length
-    if (n < 3) return null
-    val seen = new java.util.LinkedHashSet[String]()
-    var j = 0
-    while (j + 3 <= n) {
-      seen.add(words(j) + " " + words(j + 1) + " " + words(j + 2))
-      j += 1
-    }
-    val out = new Array[Any](seen.size)
-    val it = seen.iterator()
-    var i = 0
-    while (it.hasNext) { out(i) = UTF8String.fromString(it.next()); i += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  /** Distinct `width`-code-point grams (see DistinctGrams). */
-  def distinctGrams(s: UTF8String, width: Int): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val cps = s.toString.codePoints().toArray
-    val n = cps.length
-    if (n < width) return null
-    val seen = new java.util.LinkedHashSet[String]()
-    var i = 0
-    while (i + width <= n) {
-      seen.add(new String(cps, i, width))
-      i += 1
-    }
-    val out = new Array[Any](seen.size)
-    val it = seen.iterator()
-    var k = 0
-    while (it.hasNext) { out(k) = UTF8String.fromString(it.next()); k += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
   /** 32-bit SimHash of the space-split tokens of `s` (WITH duplicates —
     * token frequency weights the bits), from the first 32 bits of each
     * token's md5. Bit j of the result is set iff more tokens have bit j
@@ -244,12 +206,12 @@ object Md5Util {
   }
 
   /** Distinct xxhash64 (Spark seed 42) hashes of the `width`-code-point
-    * grams of `s`, first-occurrence order — the long-keyed twin of
-    * [[distinctGrams]] for consumers where only set sizes and
-    * intersection counts reach the output (injective-invariant modulo
-    * ~n²/2⁶⁵ collision odds): 8-byte elements instead of 4-char
-    * UTF8Strings shrink the shuffled per-doc arrays ~4× and make
-    * array_intersect compare longs. */
+    * grams of `s`, first-occurrence order — long keys for consumers
+    * where only set sizes and intersection counts reach the output
+    * (collision-resistant, not injective: ~n²/2⁶⁵ collision odds):
+    * 8-byte elements instead of 4-char UTF8Strings shrink the shuffled
+    * per-doc arrays ~4× and make array_intersect compare longs. Null
+    * for strings shorter than `width`. */
   def distinctGramHashes(s: UTF8String, width: Int)
       : org.apache.spark.sql.catalyst.util.GenericArrayData = {
     val cps = s.toString.codePoints().toArray
@@ -557,27 +519,11 @@ object Md5Util {
   * fingerprint operators are pure hash throughput, so this is where
   * a native expression beats the built-in (SURVEY §4 graft.functions).
   */
-case class FastMd5(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = StringType
-
-  override def nullIntolerant: Boolean = true
-
+case class FastMd5(child: Expression) extends UnaryKernel {
   override def prettyName: String = "fast_md5"
-
-  override protected def nullSafeEval(v: Any): Any =
-    Md5Util.md5Hex(v.asInstanceOf[UTF8String].getBytes)
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.Md5Util.md5Hex($c.getBytes())")
-
+  override protected def accepts = StaticKernel.Strings
+  override def dataType: DataType = StringType
+  override protected def forwarder = "graft.functions.Md5Util.md5Hex"
   override protected def withNewChildInternal(
       newChild: Expression): FastMd5 = copy(child = newChild)
 }
@@ -589,36 +535,15 @@ case class FastMd5(child: Expression) extends UnaryExpression {
   * whole-stage codegen — no explode, no shuffle, the fingerprint query
   * becomes a narrow projection. Matches
   * min(md5(substring(text, i, width))) exactly (ASCII hex compares
-  * lexicographically the same under String and byte order). */
-case class MinGramMd5(child: Expression, width: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = StringType
-
-  override def nullable: Boolean = true
-
-  override def nullIntolerant: Boolean = true
-
+  * lexicographically the same under String and byte order). Null for
+  * documents shorter than `width`. */
+case class MinGramMd5(child: Expression, width: Int) extends UnaryKernel {
   override def prettyName: String = "min_gram_md5"
-
-  override protected def nullSafeEval(v: Any): Any =
-    Md5Util.minGramMd5(v.asInstanceOf[UTF8String], width)
-
-  // nullSafeCodeGen (NOT defineCodeGen) because the result is null for
-  // non-null input shorter than `width` — defineCodeGen never sets
-  // ev.isNull, which would hand a null value flagged non-null to the
-  // consuming UnsafeRow writer under whole-stage codegen.
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Md5Util.minGramMd5($c, $width);
-      ${ev.isNull} = (${ev.value} == null);""")
-
+  override protected def accepts = StaticKernel.Strings
+  override def dataType: DataType = StringType
+  override protected def forwarder = "graft.functions.Md5Util.minGramMd5"
+  override protected def planArgs = Seq("width" -> width)
+  override protected def mayReturnNull = true
   override protected def withNewChildInternal(
       newChild: Expression): MinGramMd5 = copy(child = newChild)
 }
@@ -630,194 +555,51 @@ case class MinGramMd5(child: Expression, width: Int)
   * 0..7 over shingles built as concat_ws(' ', w[j], w[j+1], w[j+2]) from
   * split(text, ' ') — including split's empty tokens on repeated
   * spaces. Returns null when the doc has fewer than 3 words. */
-case class MinhashSlices(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
-
-  override def nullable: Boolean = true
-
-  override def nullIntolerant: Boolean = true
-
+case class MinhashSlices(child: Expression) extends UnaryKernel {
   override def prettyName: String = "minhash_slices"
-
-  override protected def nullSafeEval(v: Any): Any =
-    Md5Util.minhashSlices(v.asInstanceOf[UTF8String])
-
-  // see MinGramMd5: result is null for <3-word docs, so ev.isNull must
-  // be set explicitly under codegen
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Md5Util.minhashSlices($c);
-      ${ev.isNull} = (${ev.value} == null);""")
-
+  override protected def accepts = StaticKernel.Strings
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override protected def forwarder = "graft.functions.Md5Util.minhashSlices"
+  override protected def mayReturnNull = true
   override protected def withNewChildInternal(
       newChild: Expression): MinhashSlices = copy(child = newChild)
 }
 
-/** Distinct word-3-shingle set per document as an array, in one loop —
-  * with MinhashSlices this makes the whole per-doc dedup state
-  * (signature + shingle set + count) a PROJECTION: no explode, no
-  * aggregation shuffle. Element order is insertion order; every
-  * consumer (size, array_intersect cardinality) is order-insensitive,
-  * matching collect_set semantics. Null for docs with <3 words. */
-case class DistinctShingles(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
-
-  override def nullable: Boolean = true
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "distinct_shingles"
-
-  override protected def nullSafeEval(v: Any): Any =
-    Md5Util.distinctShingles(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Md5Util.distinctShingles($c);
-      ${ev.isNull} = (${ev.value} == null);""")
-
+/** See Md5Util.pHash32: byte-domain dHash of a binary payload. */
+case class PHash32(child: Expression) extends UnaryKernel {
+  override def prettyName: String = "phash32"
+  override protected def accepts = StaticKernel.Binary
+  override def dataType: DataType = LongType
+  override protected def forwarder = "graft.functions.Md5Util.pHash32"
+  override protected def mayReturnNull = true
   override protected def withNewChildInternal(
-      newChild: Expression): DistinctShingles = copy(child = newChild)
-}
-
-/** Distinct char n-gram set per document as an array (see
-  * DistinctShingles — same contract for the ngram-Jaccard verifier).
-  * Null for docs shorter than `width` code points. */
-case class DistinctGrams(child: Expression, width: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
-
-  override def nullable: Boolean = true
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "distinct_grams"
-
-  override protected def nullSafeEval(v: Any): Any =
-    Md5Util.distinctGrams(v.asInstanceOf[UTF8String], width)
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Md5Util.distinctGrams($c, $width);
-      ${ev.isNull} = (${ev.value} == null);""")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): DistinctGrams = copy(child = newChild)
+      newChild: Expression): PHash32 = copy(child = newChild)
 }
 
 /** Whole-document 32-bit SimHash as one fused per-row loop (see
   * Md5Util.simHash32 for the bit contract) — replaces a token explode
   * + 32 aggregate expressions + hash aggregate with a shuffle-free
   * projection. */
-/** See Md5Util.pHash32: byte-domain dHash of a binary payload. */
-case class PHash32(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.BinaryType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary argument, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = LongType
-
-  override def nullable: Boolean = true
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "phash32"
-
-  override protected def nullSafeEval(v: Any): Any =
-    Md5Util.pHash32(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      java.lang.Long ${ev.value}_boxed = graft.functions.Md5Util.pHash32($c);
-      ${ev.isNull} = (${ev.value}_boxed == null);
-      ${ev.value} = ${ev.isNull} ? -1L : ${ev.value}_boxed.longValue();""")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): PHash32 = copy(child = newChild)
-}
-
-case class SimHash32(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = LongType
-
-  override def nullable: Boolean = child.nullable
-
-  override def nullIntolerant: Boolean = true
-
+case class SimHash32(child: Expression) extends UnaryKernel {
   override def prettyName: String = "simhash32"
-
-  override protected def nullSafeEval(v: Any): Any =
-    Md5Util.simHash32(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Md5Util.simHash32($c)")
-
+  override protected def accepts = StaticKernel.Strings
+  override def dataType: DataType = LongType
+  override protected def forwarder = "graft.functions.Md5Util.simHash32"
   override protected def withNewChildInternal(
       newChild: Expression): SimHash32 = copy(child = newChild)
 }
 
-/** Long-keyed twin of [[DistinctGrams]]: distinct xxhash64 hashes of
-  * the char `width`-grams (see Md5Util.distinctGramHashes for the
-  * injective-invariance argument). */
+/** Distinct xxhash64 hashes of the char `width`-grams, first-seen
+  * order (see Md5Util.distinctGramHashes for the injective-invariance
+  * argument). Null for docs shorter than `width` code points. */
 case class DistinctGramHashes(child: Expression, width: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullable: Boolean = true
-
-  override def nullIntolerant: Boolean = true
-
+    extends UnaryKernel {
   override def prettyName: String = "distinct_gram_hashes"
-
-  override protected def nullSafeEval(v: Any): Any =
-    Md5Util.distinctGramHashes(v.asInstanceOf[UTF8String], width)
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Md5Util.distinctGramHashes($c, $width);
-      ${ev.isNull} = (${ev.value} == null);""")
-
+  override protected def accepts = StaticKernel.Strings
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override protected def forwarder = "graft.functions.Md5Util.distinctGramHashes"
+  override protected def planArgs = Seq("width" -> width)
+  override protected def mayReturnNull = true
   override protected def withNewChildInternal(
       newChild: Expression): DistinctGramHashes = copy(child = newChild)
 }
@@ -833,40 +615,21 @@ case class DistinctGramHashes(child: Expression, width: Int)
   * keys) or xxhash64 longs (narrow shuffles). Null for docs with
   * fewer than `width` words. */
 case class DistinctWordGramHashes(child: Expression, width: Int,
-    variant: String) extends UnaryExpression {
+    variant: String) extends UnaryKernel {
   require(width > 0, "width must be positive")
   require(variant == "md5" || variant == "xxhash64",
     s"unsupported gram hash $variant")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.simpleString}")
-
+  override def prettyName: String = "distinct_word_gram_hashes"
+  override protected def accepts = StaticKernel.Strings
   override def dataType: DataType =
     if (variant == "md5") ArrayType(StringType, containsNull = false)
     else ArrayType(LongType, containsNull = false)
-
-  override def nullable: Boolean = true
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "distinct_word_gram_hashes"
-
-  override protected def nullSafeEval(v: Any): Any =
-    if (variant == "md5")
-      Md5Util.distinctWordGramMd5(v.asInstanceOf[UTF8String], width)
-    else Md5Util.distinctWordGramXx(v.asInstanceOf[UTF8String], width)
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (variant == "md5") "distinctWordGramMd5"
-      else "distinctWordGramXx"
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Md5Util.$fn($c, $width);
-      ${ev.isNull} = (${ev.value} == null);""")
-  }
-
+  override protected def forwarder =
+    if (variant == "md5") "graft.functions.Md5Util.distinctWordGramMd5"
+    else "graft.functions.Md5Util.distinctWordGramXx"
+  override protected def planArgs = Seq("width" -> width)
+  override protected def mayReturnNull = true
   override protected def withNewChildInternal(
       newChild: Expression): DistinctWordGramHashes = copy(child = newChild)
 }
@@ -882,33 +645,12 @@ case class DistinctWordGramHashes(child: Expression, width: Int,
   * corpora). Both inputs MUST be duplicate-free and ascending — the
   * signature kernels' set outputs wrapped in sort_array qualify. */
 case class SortedLongIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (Seq(left, right).forall(e => e.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<bigint> arguments, got " +
-        s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
-
-  override def dataType: DataType = LongType
-
-  override def nullIntolerant: Boolean = true
-
+    extends BinaryKernel {
   override def prettyName: String = "sorted_long_intersect_count"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Md5Util.sortedLongIntersectCount(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.Md5Util.sortedLongIntersectCount($a, $b);")
-
+  override protected def accepts = StaticKernel.LongSets
+  override def dataType: DataType = LongType
+  override protected def forwarder =
+    "graft.functions.Md5Util.sortedLongIntersectCount"
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedLongIntersectCount =
     copy(left = newLeft, right = newRight)
@@ -917,87 +659,39 @@ case class SortedLongIntersectCount(left: Expression, right: Expression)
 /** See Md5Util.wordGramXx: positional width-word gram xxhash64 longs,
   * document order, duplicates kept. */
 case class WordGramHashes(child: Expression, width: Int)
-    extends UnaryExpression {
+    extends UnaryKernel {
   require(width > 0, "width must be positive")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullable: Boolean = true
-
-  override def nullIntolerant: Boolean = true
-
   override def prettyName: String = "word_gram_hashes"
-
-  override protected def nullSafeEval(v: Any): Any =
-    Md5Util.wordGramXx(v.asInstanceOf[UTF8String], width)
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Md5Util.wordGramXx($c, $width);
-      ${ev.isNull} = (${ev.value} == null);""")
-
+  override protected def accepts = StaticKernel.Strings
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override protected def forwarder = "graft.functions.Md5Util.wordGramXx"
+  override protected def planArgs = Seq("width" -> width)
+  override protected def mayReturnNull = true
   override protected def withNewChildInternal(
       newChild: Expression): WordGramHashes = copy(child = newChild)
 }
 
 /** See Md5Util.wordHashesXx: per-word xxhash64 longs, order kept. */
-case class WordHashes(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullIntolerant: Boolean = true
-
+case class WordHashes(child: Expression) extends UnaryKernel {
   override def prettyName: String = "word_hashes"
-
-  override protected def nullSafeEval(v: Any): Any =
-    Md5Util.wordHashesXx(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Md5Util.wordHashesXx($c);")
-
+  override protected def accepts = StaticKernel.Strings
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override protected def forwarder = "graft.functions.Md5Util.wordHashesXx"
   override protected def withNewChildInternal(
       newChild: Expression): WordHashes = copy(child = newChild)
 }
 
 /** See Md5Util.wordCensus: per-document (word, count) pairs, one pass. */
-case class WordCensus(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.simpleString}")
-
+case class WordCensus(child: Expression) extends UnaryKernel {
+  override def prettyName: String = "word_census"
+  override protected def accepts = StaticKernel.Strings
   override def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("word", StringType, nullable = false),
       StructField("c", LongType, nullable = false))),
     containsNull = false)
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "word_census"
-
-  override protected def nullSafeEval(v: Any): Any =
-    Md5Util.wordCensus(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Md5Util.wordCensus($c);")
-
+  override protected def forwarder = "graft.functions.Md5Util.wordCensus"
   override protected def withNewChildInternal(
       newChild: Expression): WordCensus = copy(child = newChild)
 }
@@ -1015,14 +709,6 @@ object hashes {
   /** 8 minhash slice minima over 3-word shingles (see MinhashSlices). */
   def minhashSlices(c: Column): Column =
     graftexpr.column(MinhashSlices(graftexpr.expression(c)))
-
-  /** distinct 3-word shingle set as array (see DistinctShingles). */
-  def distinctShingles(c: Column): Column =
-    graftexpr.column(DistinctShingles(graftexpr.expression(c)))
-
-  /** distinct width-gram set as array (see DistinctGrams). */
-  def distinctGrams(c: Column, width: Int): Column =
-    graftexpr.column(DistinctGrams(graftexpr.expression(c), width))
 
   /** 32-bit document SimHash (see SimHash32). */
   def simHash32(c: Column): Column =

@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftexpr
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -587,41 +585,17 @@ object JsonKernelUtil {
 
 /** `json_long_field(doc, 'key')`: the top-level integer field of a JSON
   * object as a long — from_json(StructType(key: LongType)) semantics at
-  * byte-scan cost (see [[JsonKernelUtil.longField]]). */
+  * byte-scan cost (see [[JsonKernelUtil.longField]]). Null on an absent,
+  * malformed or non-integer field. */
 case class JsonLongField(child: Expression, key: String)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = LongType
-
-  // null on absent/malformed/non-integer even for non-null input
-  override def nullable: Boolean = true
-
-  override def nullIntolerant: Boolean = true
-
+    extends UnaryKernel {
   override def prettyName: String = "json_long_field"
-
-  private lazy val keyUtf8 = UTF8String.fromString(key)
-
-  override protected def nullSafeEval(v: Any): Any = {
-    val r = JsonKernelUtil.longField(v.asInstanceOf[UTF8String], keyUtf8)
-    if (r == null) null else r.longValue()
-  }
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val keyRef = ctx.addReferenceObj("jsonKey", keyUtf8,
-      classOf[UTF8String].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      java.lang.Long r = graft.functions.JsonKernelUtil.longField($c, $keyRef);
-      ${ev.isNull} = (r == null);
-      ${ev.value} = ${ev.isNull} ? -1L : r.longValue();""")
-  }
-
+  override protected def accepts = StaticKernel.Strings
+  override def dataType: DataType = LongType
+  override protected def forwarder = "graft.functions.JsonKernelUtil.longField"
+  override protected def planArgs =
+    Seq("jsonKey" -> UTF8String.fromString(key))
+  override protected def mayReturnNull = true
   override protected def withNewChildInternal(
       newChild: Expression): JsonLongField = copy(child = newChild)
 }
@@ -635,32 +609,12 @@ case class JsonLongField(child: Expression, key: String)
   * The VARIANT-flatten hot path (reference data.*_v LATERAL FLATTEN
   * views): at 10× events the Jackson map parse was ~70% of
   * q_variant_flatten's runtime. */
-case class JsonKvPairs(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = JsonKvPairs.OutType
-
-  override def nullable: Boolean = true
-
-  override def nullIntolerant: Boolean = true
-
+case class JsonKvPairs(child: Expression) extends UnaryKernel {
   override def prettyName: String = "json_kv_pairs"
-
-  override protected def nullSafeEval(v: Any): Any =
-    JsonKernelUtil.kvPairs(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      org.apache.spark.sql.catalyst.util.GenericArrayData r =
-        graft.functions.JsonKernelUtil.kvPairs($c);
-      ${ev.isNull} = (r == null);
-      if (!${ev.isNull}) { ${ev.value} = r; }""")
-
+  override protected def accepts = StaticKernel.Strings
+  override def dataType: DataType = JsonKvPairs.OutType
+  override protected def forwarder = "graft.functions.JsonKernelUtil.kvPairs"
+  override protected def mayReturnNull = true
   override protected def withNewChildInternal(
       newChild: Expression): JsonKvPairs = copy(child = newChild)
 }

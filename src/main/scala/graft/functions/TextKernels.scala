@@ -3,10 +3,9 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.graftexpr
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen helpers for the text-quality kernels. */
@@ -350,83 +349,34 @@ object TextKernelUtil {
 /** See TextKernelUtil.tokenInListCount. `tokens` is a literal list fixed
   * at plan time (stopword dictionaries). */
 case class TokenInListCount(child: Expression, tokens: Seq[String])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = LongType
-
-  override def nullIntolerant: Boolean = true
-
+    extends UnaryKernel {
   override def prettyName: String = "token_in_list_count"
-
-  private lazy val tokenArray = tokens.toArray
-
-  override protected def nullSafeEval(v: Any): Any =
-    TextKernelUtil.tokenInListCount(v.asInstanceOf[UTF8String], tokenArray)
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("tokens", tokenArray, "java.lang.String[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextKernelUtil.tokenInListCount($c, $ref)")
-  }
-
+  override protected def accepts = StaticKernel.Strings
+  override def dataType: DataType = LongType
+  override protected def forwarder =
+    "graft.functions.TextKernelUtil.tokenInListCount"
+  override protected def planArgs = Seq("tokens" -> tokens.toArray)
   override protected def withNewChildInternal(
       newChild: Expression): TokenInListCount = copy(child = newChild)
 }
 
 /** See TextKernelUtil.bpeTokenCount. */
-case class BpeTokenCount(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = LongType
-
-  override def nullIntolerant: Boolean = true
-
+case class BpeTokenCount(child: Expression) extends UnaryKernel {
   override def prettyName: String = "bpe_token_count"
-
-  override protected def nullSafeEval(v: Any): Any =
-    TextKernelUtil.bpeTokenCount(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextKernelUtil.bpeTokenCount($c)")
-
+  override protected def accepts = StaticKernel.Strings
+  override def dataType: DataType = LongType
+  override protected def forwarder =
+    "graft.functions.TextKernelUtil.bpeTokenCount"
   override protected def withNewChildInternal(
       newChild: Expression): BpeTokenCount = copy(child = newChild)
 }
 
 /** See TextKernelUtil.digitCount. */
-case class DigitCount(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = LongType
-
-  override def nullIntolerant: Boolean = true
-
+case class DigitCount(child: Expression) extends UnaryKernel {
   override def prettyName: String = "digit_count"
-
-  override protected def nullSafeEval(v: Any): Any =
-    TextKernelUtil.digitCount(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextKernelUtil.digitCount($c)")
-
+  override protected def accepts = StaticKernel.Strings
+  override def dataType: DataType = LongType
+  override protected def forwarder = "graft.functions.TextKernelUtil.digitCount"
   override protected def withNewChildInternal(
       newChild: Expression): DigitCount = copy(child = newChild)
 }
@@ -434,59 +384,29 @@ case class DigitCount(child: Expression) extends UnaryExpression {
 /** See TextKernelUtil.bucketWeightSum. `weights` is the 2^k-entry
   * model table fixed at plan time (rides as a reference object). */
 case class BucketWeightSum(child: Expression, weights: Array[Double])
-    extends UnaryExpression {
+    extends UnaryKernel {
   require(weights.length == 256,
     "BucketWeightSum buckets by one md5 byte: need exactly 256 weights")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = DoubleType
-
-  override def nullIntolerant: Boolean = true
-
   override def prettyName: String = "bucket_weight_sum"
-
-  override protected def nullSafeEval(v: Any): Any =
-    TextKernelUtil.bucketWeightSum(v.asInstanceOf[UTF8String], weights)
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("weights", weights, "double[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextKernelUtil.bucketWeightSum($c, $ref)")
-  }
-
+  override protected def accepts = StaticKernel.Strings
+  override def dataType: DataType = DoubleType
+  override protected def forwarder =
+    "graft.functions.TextKernelUtil.bucketWeightSum"
+  override protected def planArgs = Seq("weights" -> weights)
   override protected def withNewChildInternal(
       newChild: Expression): BucketWeightSum = copy(child = newChild)
 }
 
 /** See TextKernelUtil.trigramStats: struct(n_tri, n_uniq) per row. */
-case class TrigramStats(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.simpleString}")
-
+case class TrigramStats(child: Expression) extends UnaryKernel {
+  override def prettyName: String = "trigram_stats"
+  override protected def accepts = StaticKernel.Strings
   override def dataType: DataType = StructType(Seq(
     StructField("n_tri", LongType, nullable = false),
     StructField("n_uniq", LongType, nullable = false)))
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "trigram_stats"
-
-  override protected def nullSafeEval(v: Any): Any =
-    TextKernelUtil.trigramStats(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernelUtil.trigramStats($c);")
-
+  override protected def forwarder =
+    "graft.functions.TextKernelUtil.trigramStats"
   override protected def withNewChildInternal(
       newChild: Expression): TrigramStats = copy(child = newChild)
 }
@@ -494,66 +414,30 @@ case class TrigramStats(child: Expression) extends UnaryExpression {
 /** See TextKernelUtil.termStats: struct(dl, cnts) per row — token total
   * plus per-term occurrence counts for the plan-time `tokens` list. */
 case class TermStats(child: Expression, tokens: Seq[String])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.simpleString}")
-
+    extends UnaryKernel {
+  override def prettyName: String = "term_stats"
+  override protected def accepts = StaticKernel.Strings
   override def dataType: DataType = StructType(Seq(
     StructField("dl", LongType, nullable = false),
-    StructField("cnts",
-      org.apache.spark.sql.types.ArrayType(LongType, containsNull = false),
+    StructField("cnts", ArrayType(LongType, containsNull = false),
       nullable = false)))
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "term_stats"
-
-  private lazy val tokenArray = tokens.toArray
-
-  override protected def nullSafeEval(v: Any): Any =
-    TextKernelUtil.termStats(v.asInstanceOf[UTF8String], tokenArray)
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("tokens", tokenArray, "java.lang.String[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernelUtil.termStats($c, $ref);")
-  }
-
+  override protected def forwarder = "graft.functions.TextKernelUtil.termStats"
+  override protected def planArgs = Seq("tokens" -> tokens.toArray)
   override protected def withNewChildInternal(
       newChild: Expression): TermStats = copy(child = newChild)
 }
 
 /** See TextKernelUtil.piiCounts: struct(c_email, c_ipv4, c_ssn,
   * c_phone) per row. Cited pattern semantics: TextOps.PiiPatterns. */
-case class PiiCounts(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType.simpleString}")
-
+case class PiiCounts(child: Expression) extends UnaryKernel {
+  override def prettyName: String = "pii_counts"
+  override protected def accepts = StaticKernel.Strings
   override def dataType: DataType = StructType(Seq(
     StructField("c_email", LongType, nullable = false),
     StructField("c_ipv4", LongType, nullable = false),
     StructField("c_ssn", LongType, nullable = false),
     StructField("c_phone", LongType, nullable = false)))
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "pii_counts"
-
-  override protected def nullSafeEval(v: Any): Any =
-    TextKernelUtil.piiCounts(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernelUtil.piiCounts($c);")
-
+  override protected def forwarder = "graft.functions.TextKernelUtil.piiCounts"
   override protected def withNewChildInternal(
       newChild: Expression): PiiCounts = copy(child = newChild)
 }

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
@@ -229,36 +229,18 @@ object NearestCentroidUtil {
   * ties to the smallest cid (centroids pre-sorted by the caller).
   */
 case class NearestCentroid(child: Expression, cents: Array[Array[Double]],
-    cids: Array[Long]) extends UnaryExpression {
+    cids: Array[Long]) extends UnaryKernel {
   require(cents.nonEmpty && cents.length == cids.length,
     "NearestCentroid needs a non-empty centroid matrix with one cid each")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<double>, got ${other.simpleString}")
-  }
-
+  override def prettyName: String = "nearest_centroid"
+  override protected def accepts = StaticKernel.Vectors
   override def dataType: DataType = StructType(Seq(
     StructField("dist", DoubleType, nullable = false),
     StructField("cid", LongType, nullable = false)))
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "nearest_centroid"
-
-  override protected def nullSafeEval(input: Any): Any =
-    NearestCentroidUtil.nearest(input.asInstanceOf[ArrayData], cents, cids)
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("cents", cents, "double[][]")
-    val cidsRef = ctx.addReferenceObj("cids", cids, "long[]")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.NearestCentroidUtil" +
-        s".nearest($v, $centsRef, $cidsRef);")
-  }
-
+  override protected def forwarder =
+    "graft.functions.NearestCentroidUtil.nearest"
+  override protected def planArgs = Seq("cents" -> cents, "cids" -> cids)
   override protected def withNewChildInternal(
       newChild: Expression): NearestCentroid = copy(child = newChild)
 }
@@ -305,32 +287,16 @@ object HyperplaneBucketUtil {
   * the fold: same index-order summation, same `proj > 0` bit rule.
   */
 case class HyperplaneBucket(child: Expression,
-    planes: Array[Array[Double]]) extends UnaryExpression {
+    planes: Array[Array[Double]]) extends UnaryKernel {
   require(planes.nonEmpty && planes.length <= 64,
     "HyperplaneBucket needs 1..64 planes")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<double>, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = LongType
-
-  override def nullIntolerant: Boolean = true
-
   override def prettyName: String = "hyperplane_bucket"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HyperplaneBucketUtil.bucket(input.asInstanceOf[ArrayData], planes)
-
-  override protected def doGenCode(
-      ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val planesRef = ctx.addReferenceObj("planes", planes, "double[][]")
-    defineCodeGen(ctx, ev, v =>
-      s"graft.functions.HyperplaneBucketUtil.bucket($v, $planesRef)")
-  }
-
+  override protected def accepts = StaticKernel.Vectors
+  override def dataType: DataType = LongType
+  override protected def forwarder =
+    "graft.functions.HyperplaneBucketUtil.bucket"
+  override protected def planArgs = Seq("planes" -> planes)
   override protected def withNewChildInternal(
       newChild: Expression): HyperplaneBucket = copy(child = newChild)
 }

@@ -25,6 +25,16 @@ class DedupSpec extends SparkSuite {
     assert(pruned == unpruned)
   }
 
+  test("a malformed prune threshold fails naming its conf key") {
+    val key = Dedup.PruneMinInputBytes
+    spark.conf.set(key, "256m")
+    try {
+      val e = intercept[IllegalArgumentException](
+        Dedup.pruneGate(Tables.t(spark, Sf, "documents")))
+      assert(e.getMessage.contains(key) && e.getMessage.contains("256m"))
+    } finally spark.conf.unset(key)
+  }
+
   test("connectedComponents labels a multi-hop chain with its min id") {
     // chain 10-20-30-40 (diameter 3 → needs >1 propagation round),
     // separate pair 100-200, isolated-by-absence docs don't appear

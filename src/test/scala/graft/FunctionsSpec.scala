@@ -167,37 +167,6 @@ class FunctionsSpec extends SparkSuite {
     assert(out.exists(r => !r.isNullAt(0) && !r.isNullAt(1)))
   }
 
-  test("distinct_shingles / distinct_grams match the explode+collect_set sets") {
-    val docs = Tables.t(spark, Sf, "documents").limit(50)
-      .select(col("doc_id"), col("text"))
-    // shingle sets: same elements (order-insensitive compare via sort)
-    val naiveSh = docs.filter(size(split(col("text"), " ")) >= 3)
-      .select(col("doc_id"), explode(expr(
-        """transform(sequence(1, size(split(text, ' '))-2),
-          |  i -> concat_ws(' ', element_at(split(text, ' '), i),
-          |    element_at(split(text, ' '), i+1),
-          |    element_at(split(text, ' '), i+2)))""".stripMargin)).as("sh"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_set(col("sh"))).as("expect"))
-    val fusedSh = docs.filter(size(split(col("text"), " ")) >= 3)
-      .select(col("doc_id"), sort_array(
-        graft.functions.hashes.distinctShingles(col("text"))).as("got"))
-    assert(fusedSh.join(naiveSh, Seq("doc_id"))
-      .filter(col("got") =!= col("expect")).count() == 0)
-    // gram sets
-    val naiveG = docs.filter(length(col("text")) >= 4)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, length(text)-3), i -> substring(text, i, 4))"))
-        .as("g"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_set(col("g"))).as("expect"))
-    val fusedG = docs.filter(length(col("text")) >= 4)
-      .select(col("doc_id"), sort_array(
-        graft.functions.hashes.distinctGrams(col("text"), 4)).as("got"))
-    assert(fusedG.join(naiveG, Seq("doc_id"))
-      .filter(col("got") =!= col("expect")).count() == 0)
-  }
-
   test("squared_l2_distance matches the zip_with fold bit-for-bit") {
     val df = Seq(
       (Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0)),
@@ -345,14 +314,14 @@ class FunctionsSpec extends SparkSuite {
   }
 
   test("distinct_gram_hashes is xxhash64 of distinct_grams, elementwise") {
-    // the long-keyed twin must be exactly the injective image of the
-    // string-gram set: same order, same length, xxhash64(seed 42) values
+    // the long-keyed kernel must be exactly xxhash64 (seed 42) of the
+    // distinct string-gram set: same order, same length
     val docs = Tables.t(spark, Sf, "documents").select(col("text"))
       .limit(200).union(Seq("abcd", "aaaaa", "😀😀abc").toDF("text"))
       .filter(length(col("text")) >= 4)
     val cmp = docs.select(
-      transform(graft.functions.hashes.distinctGrams(col("text"), 4),
-        g => xxhash64(g)).as("mapped"),
+      transform(expr("array_distinct(transform(sequence(1, length(text)-3), " +
+        "i -> substring(text, i, 4)))"), g => xxhash64(g)).as("mapped"),
       graft.functions.hashes.distinctGramHashes(col("text"), 4).as("fused"))
       .filter(col("mapped") =!= col("fused"))
     assert(cmp.count() == 0)
@@ -362,13 +331,17 @@ class FunctionsSpec extends SparkSuite {
   }
 
   test("width-3 word-gram hashes are xxhash64 of distinct_shingles") {
-    // lshPairs carries its shingle sets as longs; the hashed twin must
-    // be the exact injective image of the shingle-string set
+    // lshPairs carries its shingle sets as longs; they must be exactly
+    // xxhash64 of the distinct shingle strings, first-seen order
     val docs = Tables.t(spark, Sf, "documents").select(col("text"))
       .limit(200).union(Seq("a b c", "a b c d a b c").toDF("text"))
       .filter(size(split(col("text"), " ")) >= 3)
     val cmp3 = docs.select(
-      transform(graft.functions.hashes.distinctShingles(col("text")),
+      transform(expr(
+        """array_distinct(transform(sequence(1, size(split(text, ' '))-2),
+          |  i -> concat_ws(' ', element_at(split(text, ' '), i),
+          |    element_at(split(text, ' '), i+1),
+          |    element_at(split(text, ' '), i+2))))""".stripMargin),
         sh => xxhash64(sh)).as("mapped"),
       graft.functions.hashes.distinctWordGramHashes(col("text"), 3,
         "xxhash64").as("fused"))

@@ -76,12 +76,10 @@ class FuzzParitySpec extends SparkSuite {
     val d = docs.filter(length(col("text")) >= 4)
     // first-seen order must match array_distinct's, element for element
     val cmp = d.select(
-      expr("array_distinct(transform(sequence(1, length(text)-3), i -> substring(text, i, 4)))")
-        .as("naive"),
-      graft.functions.hashes.distinctGrams(col("text"), 4).as("fused"),
-      graft.functions.hashes.distinctGramHashes(col("text"), 4).as("fusedH"))
-      .filter(!(col("naive") <=> col("fused")) ||
-        !(transform(col("fused"), g => xxhash64(g)) <=> col("fusedH")))
+      transform(expr("array_distinct(transform(sequence(1, length(text)-3), i -> substring(text, i, 4)))"),
+        g => xxhash64(g)).as("naive"),
+      graft.functions.hashes.distinctGramHashes(col("text"), 4).as("fused"))
+      .filter(!(col("naive") <=> col("fused")))
     assert(cmp.count() == 0)
   }
 
@@ -246,22 +244,20 @@ class FuzzParitySpec extends SparkSuite {
 
   test("fuzz: distinct_shingles / distinct_grams on adversarial text") {
     val dSh = docs.filter(size(split(col("text"), " ")) >= 3)
+    // the hashed shingle kernel against xxhash64 of the declarative
+    // distinct shingle strings
     val cmpSh = dSh.select(
-      expr(
+      transform(expr(
         """array_distinct(transform(sequence(1, size(split(text, ' '))-2),
           |  i -> concat_ws(' ', element_at(split(text, ' '), i),
           |    element_at(split(text, ' '), i+1),
-          |    element_at(split(text, ' '), i+2))))""".stripMargin).as("naive"),
-      graft.functions.hashes.distinctShingles(col("text")).as("fused"))
+          |    element_at(split(text, ' '), i+2))))""".stripMargin),
+        sh => xxhash64(sh)).as("naive"),
+      graft.functions.hashes.distinctWordGramHashes(col("text"), 3,
+        "xxhash64").as("fused"))
       .filter(!(col("naive") <=> col("fused")))
     assert(cmpSh.count() == 0) // first-seen order, element for element
-    val dG = docs.filter(length(col("text")) >= 4)
-    val cmpG = dG.select(
-      expr("array_distinct(transform(sequence(1, length(text)-3), i -> substring(text, i, 4)))")
-        .as("naive"),
-      graft.functions.hashes.distinctGrams(col("text"), 4).as("fused"))
-      .filter(!(col("naive") <=> col("fused")))
-    assert(cmpG.count() == 0)
+    // (the gram half is "fuzz: distinct_grams / distinct_gram_hashes parity")
   }
 
   test("fuzz: cosine matches the aggregate/zip_with fold on random vectors") {

@@ -77,7 +77,9 @@ def main():
     # committed BENCH.json while BASELINE.md/duck_out keep the old pair
     # (the structural cause of the round-20 artifact tear).
     bench_tmp = bench_out + ".pairtmp"
-    genv = {"SPARK_GRAFT_SF_DIR": sf_dir, "SPARK_GRAFT_CPUS": "32",
+    # graft runs on every CPU this process may use (what nproc prints)
+    cpus = len(os.sched_getaffinity(0))
+    genv = {"SPARK_GRAFT_SF_DIR": sf_dir, "SPARK_GRAFT_CPUS": str(cpus),
             "SPARK_GRAFT_BENCH_OUT": bench_tmp}
     if only:
         genv["SPARK_GRAFT_BENCH_ONLY"] = only
@@ -132,8 +134,8 @@ def main():
     # duck side ALSO goes to a temp file: writing it to its final path
     # here would reopen the tear window this tool exists to close (a
     # crash before the graft promotion would pair a NEW duck_out with
-    # the OLD bench_out). Both artifacts are promoted together after
-    # the BASELINE.md block update at the end.
+    # the OLD bench_out). Both artifacts are promoted together just
+    # before the BASELINE.md block update at the end.
     duck_tmp = duck_out + ".pairtmp"
     with open(os.path.join(REPO, duck_tmp), "w") as fh:
         fh.write(json.dumps(duck) + "\n")
@@ -164,7 +166,7 @@ def main():
         f"written together by `tools/bench_pair.py`; steal "
         f"{steal['duckdb_s']} s) |\n"
         f"| graft Spark total, same boot ({nq} queries{', ' + label if label else ''}) "
-        f"| **{g:.1f} s** = **{ratio}×** (local[32], steady-state: "
+        f"| **{g:.1f} s** = **{ratio}×** (local[{cpus}], steady-state: "
         f"best-of-2 + burst arbitration per query, noop-sink writes; "
         f"steal {steal['graft_s']} s; {stamp}) |\n")
     # subset pairs get per-query rows (that's what they exist to show);
@@ -180,6 +182,16 @@ def main():
             r = f"{gq / dq:.2f}x" if dq else "n/a"
             block += f"| {q} | {gq:.2f} | {dq:.2f} | {r} |\n"
     block += mark_end
+
+    # promote both JSON artifacts back to back BEFORE the MD rewrite:
+    # bench_out and duck_out always describe ONE pair, with the crash
+    # window reduced to the instant between the two renames, and a
+    # crash in the rewrite below cannot leave the block describing
+    # JSONs that were never promoted.
+    os.replace(os.path.join(REPO, bench_tmp), os.path.join(REPO, bench_out))
+    os.replace(os.path.join(REPO, duck_tmp), os.path.join(REPO, duck_out))
+    print(f"[bench_pair] promoted {bench_out} + {duck_out}", file=sys.stderr)
+
     md_path = os.path.join(REPO, md)
     with open(md_path) as fh:
         text = fh.read()
@@ -192,13 +204,6 @@ def main():
     else:
         print(f"[bench_pair] markers not found in {md} (or --dry) — "
               f"block:\n{block}", file=sys.stderr)
-
-    # promote both JSON artifacts back to back, last: bench_out,
-    # duck_out and the MD block now always describe ONE pair, with the
-    # crash window reduced to the instant between the two renames.
-    os.replace(os.path.join(REPO, bench_tmp), os.path.join(REPO, bench_out))
-    os.replace(os.path.join(REPO, duck_tmp), os.path.join(REPO, duck_out))
-    print(f"[bench_pair] promoted {bench_out} + {duck_out}", file=sys.stderr)
 
 
 if __name__ == "__main__":
