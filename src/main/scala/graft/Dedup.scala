@@ -32,21 +32,6 @@ object Dedup {
           |  i -> concat_ws(' ', element_at(w,i), element_at(w,i+1),
           |                 element_at(w,i+2)))""".stripMargin)).as("sh"))
 
-  /** The k "independent" hash functions are k disjoint 4-hex-char
-    * slices of ONE md5 per shingle (the standard one-hash MinHash
-    * trick): 8× less hashing per shingle, and exact Jaccard reranks
-    * candidates anyway so the 16-bit slices only need decent precision.
-    * The md5 is computed ONCE in a projection (`withShingleHash`)
-    * before the aggregation — referencing it inside each of the 8
-    * aggregate expressions would evaluate it 8 times per shingle
-    * (aggregates don't share subexpressions). */
-  private def minhashAggs = (0 until NumHashes).map { i =>
-    min(substring(col("__h"), 4 * i + 1, 4)).as(s"mh$i")
-  }
-
-  private def withShingleHash(sh: DataFrame): DataFrame =
-    sh.withColumn("__h", graft.functions.hashes.md5(col("sh")))
-
   /** #27 MinHash signatures: the whole shingle→md5→8-slice-min fold
     * runs inside one codegen'd expression (MinhashSlices) — a narrow
     * projection with NO explode and NO shuffle (codegen subexpression

@@ -21,7 +21,7 @@ import graft.functions.{CosineSimilarity, DistinctGramHashes,
   *
   * Deploy: `--conf spark.sql.extensions=graft.GraftExtensions` (the
   * standard extension hook — applies to every session of the cluster),
-  * or `SparkSession.builder().withExtensions(new GraftExtensions)` in
+  * or the session builder's `.withExtensions(new GraftExtensions)` in
   * embedded use. Each function lands in the session's FunctionRegistry
   * under the `graft_` prefix, keeping the built-in namespace clean.
   */

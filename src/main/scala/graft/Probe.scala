@@ -2,13 +2,12 @@ package graft
 
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
 import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dev probe: `runMain graft.Probe <query> [sfDir]` runs one SparkEntry
-  * query at local[nproc] with Bench's scan sizing, once to warm up
+  * query on the session Bench times ([[GraftSession]]), once to warm up
   * (JIT, codegen, parquet footers) and once timed, and prints the timed
   * run's split — construct (building the DataFrame), plan (analysis,
   * optimization, physical planning), execute (the noop write Bench
@@ -19,17 +18,7 @@ object Probe {
     require(args.nonEmpty, "usage: graft.Probe <query> [sfDir]")
     val query = args(0)
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val cpus = Runtime.getRuntime.availableProcessors.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "64m")
-      .config("spark.sql.files.openCostInBytes", "262144")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build(GraftSession.cpus)
     val writes = new LinkedBlockingQueue[QueryExecution]
     spark.listenerManager.register(new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =

@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.File
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,46 +10,36 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (dev loop)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (keep(name)) {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-        // bound storage occupancy to one query's working set (see
-        // Bench.reclaim): orphaned localCheckpoint blocks otherwise
-        // accumulate across the 140-query dump
-        spark.sparkContext.getPersistentRDDs.values
-          .filter(graft.RddCheckpointAccess.isLocallyCheckpointed)
-          .foreach(_.unpersist(blocking = false))
-      }
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val spark = GraftSession.build(GraftSession.cpus)
+    dump(spark, SparkEntry.queries.filter { case (n, _) =>
+      only.forall(_.contains(n)) }, SparkEntry.oracleSql, sfDir, outDir)
     spark.stop()
+  }
+
+  /** Writes each query's result to `$outDir/$name` and the oracle SQL of
+    * these queries to `$outDir/oracle_sql.json`. A query that throws is
+    * logged and leaves no `$outDir/$name`, not even an earlier run's, so
+    * tools/check.py reports it missing instead of checking stale rows. */
+  def dump(spark: SparkSession,
+      queries: Map[String, (SparkSession, String) => DataFrame],
+      oracles: Map[String, String], sfDir: String, outDir: String): Unit = {
+    new File(outDir).mkdirs()
+    queries.foreach { case (name, fn) =>
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        // a query that throws while planning leaves the old dir in place,
+        // one that throws while writing an empty one: drop either
+        graft.sources.FixtureStore.deleteRecursively(new File(s"$outDir/$name"))
+      }
+      // orphaned localCheckpoint blocks otherwise accumulate across the dump
+      GraftSession.reclaim(spark)
+    }
+    val json = oracles.filter { case (k, _) => queries.contains(k) }
+      .map { case (k, v) =>
+        s"${GraftSession.jsonString(k)}: ${GraftSession.jsonString(v)}" }
+      .mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
   }
 }

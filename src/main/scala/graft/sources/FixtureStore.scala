@@ -26,7 +26,7 @@ object FixtureStore {
     else ""
   }
 
-  private def deleteRecursively(f: File): Unit = {
+  private[graft] def deleteRecursively(f: File): Unit = {
     if (f.isDirectory) {
       val children = f.listFiles()
       if (children != null) children.foreach(deleteRecursively)

@@ -48,13 +48,18 @@ class LayoutSpec extends SparkSuite {
 
   test("co-located join plans no exchange on either side") {
     landed
-    withConf(NoBroadcast: _*) {
+    // Spark's default (no sorted-scan ordering), the shape a session
+    // without GraftSession's flag gets: no exchange, the sort stays
+    withConf(NoBroadcast :+
+      ("spark.sql.legacy.bucketedTableScan.outputOrdering" -> "false"): _*) {
       val j = Layout.coLocatedJoin(spark, "li_bkt", "o_bkt",
         "l_orderkey", "o_orderkey")
       val plan = j.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
       assert(!plan.contains("Exchange hashpartitioning"),
         s"bucketed join planned an exchange:\n$plan")
+      assert(plan.contains("Sort ["),
+        s"default-ordering bucketed join planned no sort:\n$plan")
     }
   }
 
@@ -69,6 +74,10 @@ class LayoutSpec extends SparkSuite {
       val joinSide = plan.split("SortMergeJoin").last
       assert(!joinSide.contains("Exchange hashpartitioning"),
         s"bucketed fact join planned an exchange:\n$plan")
+      // nor a sort: the session reports the landed in-bucket order, so
+      // this is the sort-free plan Bench times
+      assert(!joinSide.contains("Sort ["),
+        s"bucketed fact join planned a sort:\n$plan")
       assert(plan.contains("Bucketed: true"), plan)
       val got = df.collect().map(_.toString).toSeq
       val raw = Tables.t(spark, Sf, "lineitem")
@@ -97,9 +106,9 @@ class LayoutSpec extends SparkSuite {
     landed
     // one file per bucket -> the scan can report its in-bucket order;
     // Spark 3+ only does so behind the legacy flag (multi-file buckets
-    // interleave, so the default stopped trusting write-time order)
-    withConf(NoBroadcast :+
-      ("spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true"): _*) {
+    // interleave, so the default stopped trusting write-time order),
+    // which GraftSession sets
+    withConf(NoBroadcast: _*) {
       val plan = Layout.coLocatedJoin(spark, "li_bkt", "o_bkt",
           "l_orderkey", "o_orderkey")
         .queryExecution.executedPlan.toString

@@ -37,6 +37,12 @@ def table_sig(rows, cols):
     return len(rows), tuple(sorted(cols)), hash(tuple(body))
 
 ok = fail = skipped = 0
+# Verify writes no output dir for a query that threw, so an oracled query
+# without one failed; walking only the dirs that exist would skip it
+for name in sorted(oracles):
+    if not os.path.isdir(os.path.join(out_dir, name)):
+        print(f"[FAIL-miss] {name}: no output")
+        fail += 1
 for qdir in sorted(glob.glob(os.path.join(out_dir, "*"))):
     name = os.path.basename(qdir)
     if not os.path.isdir(qdir):
