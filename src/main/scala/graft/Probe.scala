@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
 import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -11,7 +12,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * (JIT, codegen, parquet footers) and once timed, and prints the timed
   * run's split — construct (building the DataFrame), plan (analysis,
   * optimization, physical planning), execute (the noop write Bench
-  * times) — then the formatted plan the write executed, after AQE's
+  * times) and the number of classes it generated and compiled
+  * (codegen cache misses; on a warm run usually a plan constant that
+  * was written into the generated code) — then the formatted
+  * plan the write executed, after AQE's
   * re-planning. Not part of the driver contract. */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -38,9 +42,11 @@ object Probe {
       Seq(t1 - t0, t2 - t1, t3 - t2).map(_ / 1e9)
     }
     once()
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val Seq(c, p, e) = once()
     println(f"$query: construct=$c%.3f plan=$p%.3f execute=$e%.3f " +
-      f"wall=${c + p + e}%.3f s")
+      f"wall=${c + p + e}%.3f s compiles=" +
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles))
     // listener events arrive asynchronously; the timed write is the 2nd
     val executed = (1 to 2).map(_ => writes.poll(60, TimeUnit.SECONDS)).last
     if (executed != null)

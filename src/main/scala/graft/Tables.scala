@@ -71,12 +71,16 @@ object Tables {
   /** Rule time-window over a date-partitioned event table: the ts
     * predicate does the exact windowing, the derived date predicate is
     * what Catalyst turns into partition pruning (only matching date
-    * directories are listed/scanned). */
+    * directories are listed/scanned). The ts bounds are
+    * [[graft.functions.ParamLiteral]]s, so a scheduler sliding the
+    * window reuses the generated code; the date bounds are plain
+    * literals, since pruning evaluates them at planning time. */
   def timeWindow(events: DataFrame, fromTs: String, toTsExclusive: String): DataFrame = {
     val from = lit(fromTs).cast("timestamp")
     val to = lit(toTsExclusive).cast("timestamp")
     events.filter(
       col("date") >= to_date(from) && col("date") <= to_date(to) &&
-        col("ts") >= from && col("ts") < to)
+        col("ts") >= graft.functions.ParamLiteral.timestamp(fromTs) &&
+        col("ts") < graft.functions.ParamLiteral.timestamp(toTsExclusive))
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.functions.ParamLiteral
+
 /** An alert rule: a declarative predicate + field mapping over an event
   * table, the Spark re-expression of a SnowAlert rule view
   * (reference: src/runners/alert_queries_runner.py:38-62, packs SQL).
@@ -59,27 +61,62 @@ object RuleEngine {
       toTsExclusive: String,
       alertTimeS: Long): DataFrame =
     events
-      .filter(
-        rule.predicate &&
-          rule.eventTime >= lit(fromTs).cast("timestamp") &&
-          rule.eventTime < lit(toTsExclusive).cast("timestamp"))
-      .select(
-        md5(concat_ws(":", lit(rule.name), idCol)).as("alert_id"),
-        lit(rule.name).as("query_name"),
-        lit(rule.queryId).as("query_id"),
-        lit(rule.environment).as("environment"),
-        lit(rule.sources).as("sources"),
-        rule.actor.as("actor"),
-        rule.target.as("object"),
-        rule.action.as("action"),
-        lit(rule.title).as("title"),
-        rule.eventTime.cast("long").as("event_time_s"),
-        lit(alertTimeS).as("alert_time_s"),
-        rule.description.as("description"),
-        lit(rule.detector).as("detector"),
-        rule.eventData.as("event_data"),
-        rule.severity.as("severity"),
-        lit(1L).as("counter"))
+      .filter(hit(rule, fromTs, toTsExclusive))
+      .select(alertColumns(rule, idCol, alertTimeS): _*)
+
+  /** Every rule of `rules` over ONE pass of `events`: one filter keeps
+    * the events some rule hit, one generator emits a row per rule that
+    * hit it, and `rule_pos` says which (its index in `rules`). Without
+    * `rule_pos` the rows are those of the per-rule [[runAlertRule]]
+    * frames' union, `alert_id` included; the rules' column types must
+    * unify, as that union's must. */
+  def runAlertRules(
+      events: DataFrame,
+      rules: Seq[AlertRule],
+      idCol: Column,
+      fromTs: String,
+      toTsExclusive: String,
+      alertTimeS: Long): DataFrame = {
+    require(rules.nonEmpty, "runAlertRules needs at least one rule")
+    val hits = rules.map(hit(_, fromTs, toTsExclusive))
+    val rows = rules.zip(hits).map { case (r, h) =>
+      when(h, struct(alertColumns(r, idCol, alertTimeS): _*))
+    }
+    events
+      .filter(hits.reduce(_ || _))
+      .select(posexplode(array(rows: _*)).as(Seq("rule_pos", "__alert")))
+      .filter(col("__alert").isNotNull)
+      .select(col("rule_pos"), col("__alert.*"))
+  }
+
+  /** A rule's hit test: its predicate, inside its own `eventTime`
+    * window. The bounds are [[graft.functions.ParamLiteral]]s, so the
+    * generated code does not change with the window. */
+  private def hit(rule: AlertRule, fromTs: String, toTsExclusive: String)
+      : Column =
+    rule.predicate &&
+      rule.eventTime >= ParamLiteral.timestamp(fromTs) &&
+      rule.eventTime < ParamLiteral.timestamp(toTsExclusive)
+
+  /** The alert row a rule emits for an event it hit. */
+  private def alertColumns(rule: AlertRule, idCol: Column, alertTimeS: Long)
+      : Seq[Column] = Seq(
+    md5(concat_ws(":", lit(rule.name), idCol)).as("alert_id"),
+    lit(rule.name).as("query_name"),
+    lit(rule.queryId).as("query_id"),
+    lit(rule.environment).as("environment"),
+    lit(rule.sources).as("sources"),
+    rule.actor.as("actor"),
+    rule.target.as("object"),
+    rule.action.as("action"),
+    lit(rule.title).as("title"),
+    rule.eventTime.cast("long").as("event_time_s"),
+    ParamLiteral.long(alertTimeS).as("alert_time_s"),
+    rule.description.as("description"),
+    lit(rule.detector).as("detector"),
+    rule.eventData.as("event_data"),
+    rule.severity.as("severity"),
+    lit(1L).as("counter"))
 
   /** Merge/dedup new alerts: one row per (object, description) with
     * summed counter and earliest times. EVERY body column comes from the
@@ -433,8 +470,8 @@ object RuleEngine {
     // (1 rule scan instead of 2, +1 sequential job) also measured
     // slower at 100x — both rejected on numbers. Callers running over
     // an expensive-to-recompute alert frame should materialize it
-    // BEFORE calling (the composed Runner pipeline already does);
-    // the operator itself stays lazy.
+    // BEFORE calling; the operator itself stays lazy. (The composed
+    // Runner pipeline calls `correlate`, not this operator.)
     val a = alerts.select(col("alert_id").as("a_id"),
       col("actor").as("a_actor"), col("object").as("a_object"),
       col("action").as("a_action"), col("event_time_s").as("a_t"))

@@ -99,15 +99,20 @@ class RunLog(val runId: String) { // non-final: specs override flush to
   // (Dataset.observe) instead: the counts are computed as a side
   // channel of the ONE terminal action, so each rule's scan runs once.
   // Call flush() after that action to resolve the rows.
-  private val pendingObs = mutable.ArrayBuffer
-    .empty[(String, Long, org.apache.spark.sql.Observation, Boolean)]
+  private val pendingObs = mutable.ArrayBuffer.empty[RunLog.Pending]
+
+  private def observation(queryName: String) =
+    org.apache.spark.sql.Observation(s"${runId}_$queryName")
 
   def observedInsert(queryName: String)(stage: => DataFrame): DataFrame = {
     val t0 = System.currentTimeMillis()
     try {
       val df = stage
-      val obs = org.apache.spark.sql.Observation(s"${runId}_$queryName")
-      synchronized { pendingObs += ((queryName, t0, obs, false)) }
+      val obs = observation(queryName)
+      synchronized {
+        pendingObs += RunLog.Pending(queryName, t0, obs,
+          m => (m("inserted").asInstanceOf[Long], 0L, 0L))
+      }
       df.observe(obs,
         org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.lit(1)).as("inserted"))
@@ -122,13 +127,38 @@ class RunLog(val runId: String) { // non-final: specs override flush to
     }
   }
 
+  /** Insert stages fused into one frame: row r belongs to stage
+    * `queryNames(r.position)`. ONE observation counts every stage's rows
+    * (a `count_if` per position); flush records one row per name, in
+    * order, each spanning the whole fused action. Names may repeat. */
+  def observedInserts(queryNames: Seq[String], position: String)(
+      fused: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, count_if}
+    require(queryNames.nonEmpty, "observedInserts needs at least one stage")
+    val t0 = System.currentTimeMillis()
+    val obs = observation("__fused_inserts")
+    synchronized {
+      queryNames.zipWithIndex.foreach { case (name, i) =>
+        pendingObs += RunLog.Pending(name, t0, obs,
+          m => (m(s"inserted_$i").asInstanceOf[Long], 0L, 0L))
+      }
+    }
+    val counts = queryNames.indices.map(i =>
+      count_if(col(position) === i).as(s"inserted_$i"))
+    fused.observe(obs, counts.head, counts.tail: _*)
+  }
+
   def observedSuppress(queryName: String)(stage: => DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, count_if}
     val t0 = System.currentTimeMillis()
     try {
       val df = stage
-      val obs = org.apache.spark.sql.Observation(s"${runId}_$queryName")
-      synchronized { pendingObs += ((queryName, t0, obs, true)) }
+      val obs = observation(queryName)
+      synchronized {
+        pendingObs += RunLog.Pending(queryName, t0, obs, m =>
+          (0L, m("suppressed").asInstanceOf[Long],
+            m("passed").asInstanceOf[Long]))
+      }
       df.observe(obs,
         count_if(col("suppression_rule") === queryName).as("suppressed"),
         count_if(!col("suppressed")).as("passed"))
@@ -157,7 +187,7 @@ class RunLog(val runId: String) { // non-final: specs override flush to
       pendingObs.clear()
       t
     }
-    toFlush.foreach { case (name, t0, obs, isSuppress) =>
+    toFlush.foreach { p =>
       // Observation.get blocks until the observed action's metrics are
       // delivered (asynchronously, shortly after the action) — bound it
       // so a never-executed stage records an error instead of hanging
@@ -168,7 +198,7 @@ class RunLog(val runId: String) { // non-final: specs override flush to
         try {
           scala.concurrent.Await.result(
             scala.concurrent.Future(
-              scala.concurrent.blocking(obs.get))(
+              scala.concurrent.blocking(p.obs.get))(
               scala.concurrent.ExecutionContext.global),
             scala.concurrent.duration.Duration(timeoutMs, "ms"))
         } catch {
@@ -176,13 +206,11 @@ class RunLog(val runId: String) { // non-final: specs override flush to
         }
       val end = System.currentTimeMillis()
       if (m.isEmpty) {
-        record(name, t0, end, error = Some("metrics never observed"))
-      } else if (isSuppress) {
-        record(name, t0, end,
-          suppressed = m("suppressed").asInstanceOf[Long],
-          passed = m("passed").asInstanceOf[Long])
+        record(p.queryName, p.t0, end, error = Some("metrics never observed"))
       } else {
-        record(name, t0, end, inserted = m("inserted").asInstanceOf[Long])
+        val (inserted, suppressed, passed) = p.counts(m)
+        record(p.queryName, p.t0, end, inserted = inserted,
+          suppressed = suppressed, passed = passed)
       }
     }
   }
@@ -196,5 +224,12 @@ class RunLog(val runId: String) { // non-final: specs override flush to
 }
 
 object RunLog {
+  /** An observed stage awaiting flush: its counts (inserted,
+    * suppressed, passed) are read from its observation's metrics, and
+    * one observation may serve several stages. */
+  private final case class Pending(queryName: String, t0: Long,
+      obs: org.apache.spark.sql.Observation,
+      counts: Map[String, Any] => (Long, Long, Long))
+
   def newRun(): RunLog = new RunLog(java.util.UUID.randomUUID().toString)
 }

@@ -33,10 +33,13 @@ final case class RunConfig(
   * CONTINUES; the reference's own regression run_violations.py:28-46
   * plants a `1/0` rule and asserts the healthy rule's rows still land
   * with the broken rule's run record carrying the error). Here the
-  * fast path still fuses every rule into one scan-shared plan; rules
-  * whose frames fail to CONSTRUCT (analysis errors: missing column,
-  * bad type) are dropped per-rule with an ERROR row. If the fused
-  * terminal action fails at RUNTIME (a rule's projection throws
+  * fast path evaluates every rule in ONE pass over the events
+  * ([[RuleEngine.runAlertRules]]: one filter, one generator emitting a
+  * row per rule hit) whose merged output both sides of every
+  * suppression join share, under one terminal action. Rules whose
+  * frames fail to CONSTRUCT (analysis errors: missing column, bad type)
+  * are dropped per-rule with an ERROR row before the pass is built. If
+  * the terminal action fails at RUNTIME (a rule's projection throws
   * mid-task: bad regex, malformed cast, divide-by-zero), the run
   * degrades to per-rule isolation — each surviving rule is probed with
   * its own action (failing rules record ERROR rows), and the pipeline
@@ -93,22 +96,28 @@ object Runner {
       RuleEngine.runAlertRule(
         events, r, idCol, cfg.fromTs, cfg.toTsExclusive, cfg.alertTimeS)
 
-    // 1. each alert rule over the shared time window (ref:
-    //    alert_queries_runner.main loops rule views), ISOLATED
-    //    per-rule: an analysis-broken rule throws inside
-    //    observedInsert (Datasets analyze eagerly), which records its
-    //    ERROR metadata row; the rule drops out and the run continues.
-    //    Stage counts for healthy rules ride the plan via observe() —
-    //    the ONE terminal action below executes every rule's event
-    //    scan exactly once; the eager count-per-stage alternative
-    //    would scan each rule's events twice — a real cost at 100 TB.
-    val constructed: Seq[(AlertRule, DataFrame)] = rules.flatMap { r =>
-      try Some(r -> log.observedInsert(r.name)(ruleFrame(r)))
-      catch { case NonFatal(_) => None } // ERROR row already recorded
+    // 1. every alert rule over the shared time window (ref:
+    //    alert_queries_runner.main loops rule views) in ONE pass over
+    //    the events. A rule broken at ANALYSIS (Datasets analyze
+    //    eagerly) records its ERROR metadata row here and drops out;
+    //    the run continues with the rest. Per-rule counts ride the plan
+    //    via one observe() of a count per rule position, so the one
+    //    terminal action reads every event once for all rules.
+    val constructed = rules.filter { r =>
+      val t0 = System.currentTimeMillis()
+      try { ruleFrame(r); true }
+      catch {
+        case NonFatal(e) =>
+          log.record(r.name, t0, System.currentTimeMillis(),
+            error = Some(String.valueOf(e.getMessage)))
+          false
+      }
     }
     val alerts =
       if (constructed.isEmpty) emptyAlerts(events, idCol, cfg)
-      else constructed.map(_._2).reduce(_.unionByName(_))
+      else log.observedInserts(constructed.map(_.name), "rule_pos")(
+        RuleEngine.runAlertRules(events, constructed, idCol, cfg.fromTs,
+          cfg.toTsExclusive, cfg.alertTimeS)).drop("rule_pos")
 
     try pipeline(alerts, suppressions, sinks, cfg, log, observed = true)
     catch {
@@ -128,7 +137,7 @@ object Runner {
         // again downstream). Materialize.frame stores full rows, so a
         // broken projection throws here, inside this rule's own probe;
         // healthy rules re-enter the pipeline pre-materialized.
-        val survivors = constructed.flatMap { case (r, _) =>
+        val survivors = constructed.flatMap { r =>
           try Some(log.timedInsert(r.name)(
             graft.Materialize.frame(ruleFrame(r))))
           catch { case NonFatal(_) => None }
@@ -203,24 +212,30 @@ object Runner {
     //    partition and re-invoke send — external handlers must dedupe on
     //    (alert_id, handler), which every HandlerResult carries.
     val results = Dispatcher.dispatch(live, sinks, cfg.defaultHandler)
+    def release(): Unit =
+      Seq(results, suppressed, merged).foreach(_.unpersist(blocking = false))
     // THE fused-plan materialization: persist() eagerly optimizes the
     // cached plan (a bomb projection over a folded-local input can
     // throw right there, at plan time) and count() executes rules →
     // merge → suppress → correlate → dispatch once, delivering every
     // observed stage metric as a side channel. ANY failure in this
     // region is the fused-plan failure the caller degrades on; the
-    // caches are released first. suppressed is persisted so the later
+    // caches are released first. merged is persisted so both sides of
+    // each suppression join read one cached merge instead of each
+    // re-running the rule pass and the merge; suppressed so the later
     // recordStatus/store consumers re-read the cache, not the scans.
     try {
+      merged.persist()
       suppressed.persist()
       results.persist()
       results.count()
     } catch {
       case NonFatal(e) =>
-        results.unpersist(blocking = false)
-        suppressed.unpersist(blocking = false)
+        release()
         throw new FusedPlanFailure(e)
     }
+    // merged fed only the now-cached store; its own cache can go
+    merged.unpersist(blocking = false)
     // post-terminal failures (flush, recordStatus) propagate WITHOUT
     // degradation — but must not strand the pass-1 caches, which on
     // success stay persisted for the returned frames' consumers
@@ -232,8 +247,7 @@ object Runner {
       AlertRunResult(handled, suppressed, results)
     } catch {
       case NonFatal(e) =>
-        results.unpersist(blocking = false)
-        suppressed.unpersist(blocking = false)
+        release()
         throw e
     }
   }

@@ -52,8 +52,12 @@ class PruningSpec extends SparkSuite {
     assert(filesRead <= 3)
     assert(filesRead < filesTotal)
     // the ts predicate is pushed to the parquet reader for row-group
-    // skipping within the surviving partitions
+    // skipping within the surviving partitions: both bounds reach the
+    // reader as source filters, not only the scan's data filters
     assert(scan.dataFilters.mkString(",").contains("ts"))
+    val pushed = scan.metadata("PushedFilters")
+    assert(pushed.contains("GreaterThanOrEqual(ts,") &&
+      pushed.contains("LessThan(ts,"), s"ts bounds not pushed: $pushed")
   }
 
   test("ivf search over the LANDED cell-partitioned vector store prunes " +

@@ -111,10 +111,10 @@ class RunnerSpec extends SparkSuite {
     assert(store.head.getAs[Long]("counter") == 2L)
   }
 
-  test("each rule's event scan executes once per run (observed metrics)") {
-    // metadata counts ride the plan via observe(); an eager count-per-
-    // stage runner would read every event row at least twice. The
-    // accumulator counts actual row reads of the event source.
+  /** Runs the two-rule fixture over an event source that counts its
+    * row reads; returns the reads and the run's metadata. */
+  private def countedRun(suppressions: Seq[SuppressionRule])
+      : (Long, Seq[graft.engine.RunMetadataRow]) = {
     val acc = spark.sparkContext.longAccumulator("event-row-reads")
     val tick = udf { () => acc.add(1); true }.asNondeterministic()
     val counted = mkEvents.filter(tick())
@@ -126,20 +126,72 @@ class RunnerSpec extends SparkSuite {
         rule("errors", col("event_type") === "error"),
         rule("logins", col("event_type") === "login")),
       idCol = col("event_id"),
-      suppressions = Nil,
+      suppressions = suppressions,
       sinks = Seq(new MemorySink(buf)),
       cfg = RunConfig("2024-01-01 00:00:00", "2024-01-02 00:00:00",
         alertTimeS = 0L, defaultHandler = "memory"),
       log = log)
-    // 2 rule branches × 5 events: each branch reads the source once
-    assert(acc.value == 10,
-      s"expected 10 event-row reads (one scan per rule), got ${acc.value}")
+    MemorySink.drain(buf)
+    (acc.value, log.entries)
+  }
+
+  test("each rule's event scan executes once per run (observed metrics)") {
+    // metadata counts ride the plan via observe(); an eager count-per-
+    // stage runner would read every event row at least twice, and a
+    // per-rule union once per rule. The accumulator counts actual row
+    // reads of the event source.
+    val (reads, entries) = countedRun(Nil)
+    assert(reads == 5,
+      s"expected 5 event-row reads (one pass for both rules), got $reads")
     // the observed metadata rows still populate with exact counts
-    assert(log.entries.map(_.query_name) ==
+    assert(entries.map(_.query_name) ==
       Seq("errors", "logins", "alert_merge", "alert_dispatch"))
-    assert(log.entries.head.inserted == 4)
-    assert(log.entries(1).inserted == 1)
-    assert(log.entries(2).inserted == 3)
+    assert(entries.head.inserted == 4)
+    assert(entries(1).inserted == 1)
+    assert(entries(2).inserted == 3)
+  }
+
+  test("with a suppression rule every event is still read once per run") {
+    // the suppression's broadcast side reads the cached merged set, not
+    // a second scan and merge of the events
+    val (reads, entries) = countedRun(Seq(SuppressionRule("squelch_u1",
+      alerts => alerts.filter(col("actor") === "u1").select("alert_id"))))
+    assert(reads == 5,
+      s"expected 5 event-row reads with a suppression, got $reads")
+    assert(entries.map(_.query_name) ==
+      Seq("errors", "logins", "alert_merge", "squelch_u1", "alert_dispatch"))
+    assert(entries(3).suppressed == 1 && entries(3).passed == 2)
+  }
+
+  test("a run over another window compiles no new code") {
+    // window bounds and alert_time_s are parameters of the generated
+    // code, not constants in it, so a scheduler's next tick reuses
+    // every class the previous tick compiled
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def tick(from: String, to: String, atS: Long): Unit = {
+      val buf = s"runner-codegen-${System.nanoTime()}"
+      val res = Runner.runAlerts(
+        events = mkEvents,
+        rules = Seq(
+          rule("errors", col("event_type") === "error"),
+          rule("logins", col("event_type") === "login")),
+        idCol = col("event_id"),
+        suppressions = Seq(SuppressionRule("squelch_u1",
+          alerts => alerts.filter(col("actor") === "u1").select("alert_id"))),
+        sinks = Seq(new MemorySink(buf)),
+        cfg = RunConfig(from, to, alertTimeS = atS,
+          defaultHandler = "memory"),
+        log = RunLog.newRun())
+      assert(res.alerts.count() == 2)
+      MemorySink.drain(buf)
+      res.store.unpersist(blocking = true)
+      res.handlerResults.unpersist(blocking = true)
+    }
+    tick("2024-01-01 00:00:00", "2024-01-02 00:00:00", 1704153600L)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    tick("2024-01-01 06:00:00", "2024-01-02 06:00:00", 1704175200L)
+    val added = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+    assert(added == 0, s"the second window compiled $added new classes")
   }
 
   test("monitoring rule over run metadata flags failed rule runs") {
