@@ -48,4 +48,14 @@ object Materialize {
         df.localCheckpoint(eager = true)
     }
   }
+
+  /** Drop the blocks behind a frame [[frame]] returned, for a caller
+    * that knows nothing reads it any more. A local checkpoint is a
+    * persisted RDD; a reliable checkpoint persists nothing (its files
+    * belong to the checkpoint dir), so this is a no-op there. */
+  def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: org.apache.spark.sql.execution.LogicalRDD =>
+      r.rdd.unpersist(blocking = false)
+    case _ =>
+  }
 }

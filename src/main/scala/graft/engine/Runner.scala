@@ -23,9 +23,10 @@ final case class RunConfig(
 /** The reference's end-to-end runner loop (src/runners/run_alerts.py:
   * alert queries → merge → suppressions → correlation → handler
   * dispatch, each stage recording run metadata) composed as ONE
-  * declarative pipeline over DataFrames. Everything except the final
-  * dispatch stays inside Catalyst; per-stage counts are the only
-  * driver-side values.
+  * declarative pipeline over DataFrames with two actions per run: one
+  * materialization of the merged alert set and one dispatch action.
+  * Per-stage counts ride those two actions as observed metrics; they
+  * are the only driver-side values.
   *
   * Failure isolation mirrors the reference's error contract
   * (alert_queries_runner.py create_alerts wraps EACH rule in its own
@@ -35,31 +36,46 @@ final case class RunConfig(
   * with the broken rule's run record carrying the error). Here the
   * fast path evaluates every rule in ONE pass over the events
   * ([[RuleEngine.runAlertRules]]: one filter, one generator emitting a
-  * row per rule hit) whose merged output both sides of every
-  * suppression join share, under one terminal action. Rules whose
-  * frames fail to CONSTRUCT (analysis errors: missing column, bad type)
-  * are dropped per-rule with an ERROR row before the pass is built. If
-  * the terminal action fails at RUNTIME (a rule's projection throws
-  * mid-task: bad regex, malformed cast, divide-by-zero), the run
-  * degrades to per-rule isolation — each surviving rule is probed with
-  * its own action (failing rules record ERROR rows), and the pipeline
-  * re-runs on the healthy set with eager per-stage metadata. The
-  * degraded path scans each rule's events individually — the
-  * correctness-over-scan-sharing trade the reference's per-rule loop
-  * makes on EVERY run, paid here only when a rule is actually broken.
+  * row per rule hit) inside the merge materialization, and suppression,
+  * correlation and dispatch plan over that small materialized set.
+  * Rules whose frames fail to CONSTRUCT (analysis errors: missing
+  * column, bad type) are dropped per-rule with an ERROR row before the
+  * pass is built. If either action fails at RUNTIME (a rule's
+  * projection throws mid-task: bad regex, malformed cast,
+  * divide-by-zero), the run degrades to per-rule isolation — each
+  * surviving rule is probed with its own action (failing rules record
+  * ERROR rows), and the pipeline re-runs on the healthy set with eager
+  * per-stage metadata. The degraded path scans each rule's events
+  * individually — the correctness-over-scan-sharing trade the
+  * reference's per-rule loop makes on EVERY run, paid here only when a
+  * rule is actually broken.
+  *
+  * Every job a run starts carries the description
+  * `runAlerts <run_id>: <stage>`, so Spark's job metrics join the run's
+  * RunLog rows; the caller's job group is left alone.
   */
 object Runner {
 
-  /** Marker for a failure of the fused TERMINAL action only. The
-    * degraded per-rule path must fire for exactly this case: a rule's
-    * projection throwing mid-task inside the shared plan. Failures in
-    * later stages (log flush, dispatch recordStatus) happen AFTER the
-    * observed metadata rows were flushed and the side-effecting
-    * dispatch already ran — degrading there would duplicate every
-    * rule's metadata row and re-send every alert, so those propagate
-    * unwrapped. */
+  /** Marker for a failure of the fast path's two actions only (merge
+    * materialization, dispatch). The degraded per-rule path must fire
+    * for exactly this case: a rule's projection throwing mid-task
+    * inside the shared plan. Failures in later stages (log flush)
+    * happen AFTER the side-effecting dispatch already ran — degrading
+    * there would duplicate every rule's metadata row and re-send every
+    * alert, so those propagate unwrapped. */
   private final class FusedPlanFailure(cause: Throwable)
     extends Exception(cause)
+
+  /** Runs `body` with every job it starts described as
+    * `runAlerts <runId>: <stage>`, then restores the caller's
+    * description. */
+  private def described[T](spark: org.apache.spark.sql.SparkSession,
+      runId: String, stage: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"runAlerts $runId: $stage")
+    try body finally sc.setJobDescription(prev)
+  }
 
   final case class AlertRunResult(
       alerts: DataFrame,
@@ -101,8 +117,8 @@ object Runner {
     //    the events. A rule broken at ANALYSIS (Datasets analyze
     //    eagerly) records its ERROR metadata row here and drops out;
     //    the run continues with the rest. Per-rule counts ride the plan
-    //    via one observe() of a count per rule position, so the one
-    //    terminal action reads every event once for all rules.
+    //    via one observe() of a count per rule position, so the merge
+    //    materialization reads every event once for all rules.
     val constructed = rules.filter { r =>
       val t0 = System.currentTimeMillis()
       try { ruleFrame(r); true }
@@ -138,8 +154,9 @@ object Runner {
         // broken projection throws here, inside this rule's own probe;
         // healthy rules re-enter the pipeline pre-materialized.
         val survivors = constructed.flatMap { r =>
-          try Some(log.timedInsert(r.name)(
-            graft.Materialize.frame(ruleFrame(r))))
+          try Some(described(events.sparkSession, log.runId,
+            s"probe ${r.name}")(log.timedInsert(r.name)(
+              graft.Materialize.frame(ruleFrame(r)))))
           catch { case NonFatal(_) => None }
         }
         val healthy =
@@ -147,7 +164,7 @@ object Runner {
           else survivors.reduce(_.unionByName(_))
         try pipeline(healthy, suppressions, sinks, cfg, log,
           observed = false)
-        catch { // a second terminal failure (e.g. a broken sink set)
+        catch { // a second action failure (e.g. a broken sink set)
           // is final — surface the real cause, not the marker
           case f: FusedPlanFailure => throw f.getCause
         }
@@ -156,8 +173,8 @@ object Runner {
 
   /** merge → suppress → correlate → dispatch over an assembled alert
     * set, with per-stage metadata either observed (fast path: metrics
-    * ride the plan, one terminal action) or eager (degraded path: one
-    * action per stage, each stage individually isolable). */
+    * ride the two actions) or eager (degraded path: one action per
+    * stage, each stage individually isolable). */
   private def pipeline(
       alerts: DataFrame,
       suppressions: Seq[SuppressionRule],
@@ -172,79 +189,93 @@ object Runner {
     def suppressStage(name: String)(stage: => DataFrame): DataFrame =
       if (observed) log.observedSuppress(name)(stage)
       else log.timedSuppress(name)(stage)
+    def stage[T](name: String)(body: => T): T =
+      described(alerts.sparkSession, log.runId, name)(body)
 
-    // 2. merge/dedup (ref: MERGE_ALERTS)
-    val merged = insertStage("alert_merge")(RuleEngine.mergeAlerts(alerts))
+    // 2. merge/dedup (ref: MERGE_ALERTS), materialized eagerly: the
+    //    run's first action. It runs the rule pass and the merge once
+    //    and delivers every rule's and the merge's observed count;
+    //    every later frame plans over its small materialized leaf, not
+    //    the rule pass. A bomb projection throws here, so its failure
+    //    is the fused-plan failure the caller degrades on.
+    val merged =
+      try stage("merge")(graft.Materialize.frame(
+        insertStage("alert_merge")(RuleEngine.mergeAlerts(alerts))))
+      catch { case NonFatal(e) => throw new FusedPlanFailure(e) }
 
     // 3. suppression rules, first matching rule wins (ref:
     //    alert_suppressions_runner runs each rule's UPDATE in its own
     //    try/except — a broken suppression records an ERROR row and is
-    //    skipped, the alert set passes through unflagged by it)
-    val suppressed = suppressions.foldLeft(
-      merged.withColumn("suppressed", lit(false))
-        .withColumn("suppression_rule", lit(null).cast("string"))) {
-      case (acc, rule) =>
-        try {
-          suppressStage(rule.name) {
-            val ids = broadcast(rule.selectIds(acc)
-              .select(col("alert_id").as("__sup_id")).distinct())
-            acc.join(ids, acc("alert_id") === ids("__sup_id"), "left")
-              .withColumn("suppression_rule",
-                when(!col("suppressed") && col("__sup_id").isNotNull,
-                  lit(rule.name)).otherwise(col("suppression_rule")))
-              .withColumn("suppressed",
-                col("suppressed") || col("__sup_id").isNotNull)
-              .drop("__sup_id")
-          }
-        } catch { case NonFatal(_) => acc } // ERROR row recorded; skip
-    } // the run's results table: read by correlate + returned
+    //    skipped, the alert set passes through unflagged by it). A
+    //    rule's hits are an existence test against its broadcast ids.
+    //    IN is three-valued: a NULL among the ids makes a non-matching
+    //    alert_id's test NULL, not false (Spark's existence-join rewrite
+    //    happens to return false), so it is coalesced to false.
+    def flag(acc: DataFrame, name: String, ids: DataFrame): DataFrame =
+      acc.withColumn("__sup_hit",
+          coalesce(col("alert_id").isin(ids), lit(false)))
+        .withColumn("suppression_rule",
+          when(!col("suppressed") && col("__sup_hit"), lit(name))
+            .otherwise(col("suppression_rule")))
+        .withColumn("suppressed", col("suppressed") || col("__sup_hit"))
+        .drop("__sup_hit")
+    // A rule selects its ids from `plain`, the same flags without the
+    // earlier stages' observe() nodes: Spark keeps one count per
+    // observation name, the last instance's (a subquery's), so a rule
+    // reading part of the set (a limit) would overwrite a stage's count.
+    val unflagged = merged.withColumn("suppressed", lit(false))
+      .withColumn("suppression_rule", lit(null).cast("string"))
+    val (suppressed, _) = stage("suppress")(
+      suppressions.foldLeft((unflagged, unflagged)) {
+        case ((acc, plain), rule) =>
+          try {
+            // first evaluated inside the stage, which records the ERROR
+            // row of a rule broken at analysis
+            lazy val ids = broadcast(rule.selectIds(plain).select("alert_id"))
+            (suppressStage(rule.name)(flag(acc, rule.name, ids)),
+              flag(plain, rule.name, ids))
+          } catch { case NonFatal(_) => (acc, plain) } // ERROR row; skip
+      }) // the run's results table: read by correlate + returned
 
     // 4. correlation over the live (non-suppressed) alerts (ref:
-    //    alert_processor processes unsuppressed alerts)
-    val live = RuleEngine.correlate(
-      suppressed.filter(!col("suppressed")), cfg.correlationGapMinutes)
+    //    alert_processor processes unsuppressed alerts); their count is
+    //    the alert_dispatch row
+    val live = stage("dispatch")(insertStage("alert_dispatch")(
+      RuleEngine.correlate(suppressed.filter(!col("suppressed")),
+        cfg.correlationGapMinutes)))
 
     // 5. handler fan-out on live alerts + per-handler results joined
     //    back (ref: alert_dispatcher.main + record_status). Dispatch is
     //    side-effecting and AT-LEAST-ONCE, like the reference's poll
-    //    loop: the eager persist+count makes the common path single-send,
+    //    loop: the persisted results make the common path single-send,
     //    but cache eviction, task retry, or speculation can re-run a
     //    partition and re-invoke send — external handlers must dedupe on
     //    (alert_id, handler), which every HandlerResult carries.
     val results = Dispatcher.dispatch(live, sinks, cfg.defaultHandler)
-    def release(): Unit =
-      Seq(results, suppressed, merged).foreach(_.unpersist(blocking = false))
-    // THE fused-plan materialization: persist() eagerly optimizes the
-    // cached plan (a bomb projection over a folded-local input can
-    // throw right there, at plan time) and count() executes rules →
-    // merge → suppress → correlate → dispatch once, delivering every
-    // observed stage metric as a side channel. ANY failure in this
-    // region is the fused-plan failure the caller degrades on; the
-    // caches are released first. merged is persisted so both sides of
-    // each suppression join read one cached merge instead of each
-    // re-running the rule pass and the merge; suppressed so the later
-    // recordStatus/store consumers re-read the cache, not the scans.
-    try {
-      merged.persist()
-      suppressed.persist()
+    def release(): Unit = {
+      results.unpersist(blocking = false)
+      graft.Materialize.release(merged)
+    }
+    // the run's second and last action: one noop write fills the
+    // results cache (suppress → correlate → dispatch run once) and
+    // delivers the suppression and alert_dispatch counts. Its failure
+    // is a fused-plan failure too; the caches are released first.
+    try stage("dispatch") {
       results.persist()
-      results.count()
+      results.write.format("noop").mode("overwrite").save()
     } catch {
       case NonFatal(e) =>
         release()
         throw new FusedPlanFailure(e)
     }
-    // merged fed only the now-cached store; its own cache can go
-    merged.unpersist(blocking = false)
-    // post-terminal failures (flush, recordStatus) propagate WITHOUT
-    // degradation — but must not strand the pass-1 caches, which on
-    // success stay persisted for the returned frames' consumers
+    // post-terminal failures (flush) propagate WITHOUT degradation —
+    // but must not strand the run's blocks, which on success stay for
+    // the returned frames' consumers. `alerts` stays lazy: it re-reads
+    // the cached results, so collecting it sends nothing.
     try {
       log.flush()
-      val handled = log.timedInsert("alert_dispatch") {
-        Dispatcher.recordStatus(live, results)
-      }
-      AlertRunResult(handled, suppressed, results)
+      AlertRunResult(Dispatcher.recordStatus(live, results), suppressed,
+        results)
     } catch {
       case NonFatal(e) =>
         release()

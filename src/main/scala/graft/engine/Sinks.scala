@@ -65,10 +65,14 @@ object MemorySink {
   def buffer(id: String): ConcurrentLinkedQueue[String] =
     buffers.computeIfAbsent(id, _ => new ConcurrentLinkedQueue[String]())
 
-  def drain(id: String): Seq[String] = {
-    val q = buffer(id)
-    Iterator.continually(q.poll()).takeWhile(_ != null).toSeq
-  }
+  /** Everything sent to `id` so far, removing the buffer from the
+    * registry (a later send starts a new one). Call it once the sends'
+    * action has finished. */
+  def drain(id: String): Seq[String] =
+    Option(buffers.remove(id)).fold(Seq.empty[String])(_.asScala.toSeq)
+
+  /** Whether the registry holds a buffer for `id`. */
+  private[graft] def holds(id: String): Boolean = buffers.containsKey(id)
 }
 
 /** Stubbed external messenger (ref: runners/handlers/slack.py — builds a

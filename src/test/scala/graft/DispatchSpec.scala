@@ -38,6 +38,22 @@ class DispatchSpec extends SparkSuite {
     assert(slack.length == 1 && slack.head.contains("\"channel\":\"#alerts\""))
   }
 
+  test("drain returns a buffer's payloads and removes the buffer") {
+    val buf = s"drain-${System.nanoTime()}"
+    val sink = new MemorySink(buf)
+    sink.send("a")
+    sink.send("b")
+    assert(MemorySink.holds(buf))
+    assert(MemorySink.drain(buf) == Seq("a", "b"))
+    assert(!MemorySink.holds(buf), "a drained buffer stays registered")
+    // draining an unknown id registers nothing either
+    assert(MemorySink.drain(buf).isEmpty)
+    assert(!MemorySink.holds(buf))
+    // a later send starts a new buffer
+    sink.send("c")
+    assert(MemorySink.drain(buf) == Seq("c"))
+  }
+
   test("pd/smtp/sns/ses/service_now sinks format the reference payloads") {
     val buf = s"ext-${System.nanoTime()}"
     val alerts = Seq(

@@ -2,8 +2,22 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.{AlertRule, MemorySink, RuleEngine, RunConfig, RunLog,
-  Runner, SuppressionRule}
+import graft.engine.{AlertRule, AlertSink, MemorySink, RuleEngine,
+  RunConfig, RunLog, Runner, SuppressionRule}
+
+/** Delivers like a [[MemorySink]], except that it throws for the alerts
+  * of `failActor`. */
+final class FailingSink(bufferId: String, failActor: String)
+    extends AlertSink {
+  val name = "memory"
+  def send(alertJson: String): String =
+    if (alertJson.contains(s""""actor":"$failActor"""")) {
+      throw new RuntimeException(s"sink down for $failActor")
+    } else {
+      MemorySink.buffer(bufferId).add(alertJson)
+      s"buffered:$bufferId"
+    }
+}
 
 /** End-to-end runner pipeline: rules → merge → suppress → correlate →
   * dispatch with metadata (the reference's run_alerts.py loop). */
@@ -475,5 +489,152 @@ class RunnerSpec extends SparkSuite {
     assert(result.alerts.collect().isEmpty)
     assert(MemorySink.drain(buf).isEmpty)
     assert(log.entries.count(_.error.nonEmpty) == 2)
+  }
+
+  test("suppression ids with a NULL and a duplicate flag exactly the " +
+      "matched alerts, once each, and drop no live alert") {
+    // IN is three-valued: a NULL id makes a non-matching alert's test
+    // NULL, which must read as not suppressed, not as a dropped row
+    def nullId(alerts: org.apache.spark.sql.DataFrame) =
+      alerts.limit(1).select(lit(null).cast("string").as("alert_id"))
+    val buf = s"runner-null-ids-${System.nanoTime()}"
+    val log = RunLog.newRun()
+    val result = Runner.runAlerts(
+      events = mkEvents,
+      rules = Seq(
+        rule("errors", col("event_type") === "error"),
+        rule("logins", col("event_type") === "login")),
+      idCol = col("event_id"),
+      suppressions = Seq(
+        SuppressionRule("squelch_u1_twice", { alerts =>
+          val u1 = alerts.filter(col("actor") === "u1").select("alert_id")
+          u1.union(u1).union(nullId(alerts))
+        }),
+        SuppressionRule("only_null", nullId)),
+      sinks = Seq(new MemorySink(buf)),
+      cfg = RunConfig("2024-01-01 00:00:00", "2024-01-02 00:00:00",
+        alertTimeS = 0L, defaultHandler = "memory"),
+      log = log)
+
+    val store = result.store.collect()
+    assert(store.length == 3, "a duplicate id must not duplicate a row")
+    assert(store.forall(r => !r.isNullAt(r.fieldIndex("suppressed"))))
+    val flagged = store.filter(_.getAs[Boolean]("suppressed"))
+    assert(flagged.map(r => (r.getAs[String]("actor"),
+      r.getAs[String]("suppression_rule"))).toSeq ==
+      Seq(("u1", "squelch_u1_twice")))
+    assert(store.filterNot(_.getAs[Boolean]("suppressed"))
+      .forall(_.isNullAt(store.head.fieldIndex("suppression_rule"))))
+    assert(result.alerts.collect().map(_.getAs[String]("actor")).sorted
+      .toSeq == Seq("u2", "u3"))
+    assert(MemorySink.drain(buf).length == 2)
+    // the counts the join-based suppression recorded for the same ids
+    val byName = log.entries.map(e => e.query_name -> e).toMap
+    assert(log.entries.map(_.query_name) == Seq("errors", "logins",
+      "alert_merge", "squelch_u1_twice", "only_null", "alert_dispatch"))
+    assert(byName("squelch_u1_twice").suppressed == 1 &&
+      byName("squelch_u1_twice").passed == 2)
+    assert(byName("only_null").suppressed == 0 &&
+      byName("only_null").passed == 2)
+    assert(byName("alert_dispatch").inserted == 2)
+  }
+
+  test("a sink that fails for some alerts records exactly those as " +
+      "failed, sends every other alert once, and re-reads send nothing") {
+    val buf = s"runner-failing-sink-${System.nanoTime()}"
+    val log = RunLog.newRun()
+    val result = Runner.runAlerts(
+      events = mkEvents,
+      rules = Seq(
+        rule("errors", col("event_type") === "error"),
+        rule("logins", col("event_type") === "login")),
+      idCol = col("event_id"),
+      suppressions = Nil,
+      sinks = Seq(new FailingSink(buf, "u3")),
+      cfg = RunConfig("2024-01-01 00:00:00", "2024-01-02 00:00:00",
+        alertTimeS = 0L, defaultHandler = "memory"),
+      log = log)
+
+    val actorOf = result.store.collect()
+      .map(r => r.getAs[String]("alert_id") -> r.getAs[String]("actor")).toMap
+    assert(actorOf.size == 3)
+    val handled = result.handlerResults.collect()
+    assert(handled.length == 3)
+    assert(handled.filterNot(_.success).map(h => actorOf(h.alert_id))
+      .toSeq == Seq("u3"))
+    assert(handled.filterNot(_.success).forall(_.details.contains("sink down")))
+    val sent = MemorySink.drain(buf)
+    val sentIds = sent.map(p =>
+      actorOf.keys.find(id => p.contains(s""""alert_id":"$id"""")).get)
+    assert(sentIds.sorted == handled.filter(_.success).map(_.alert_id)
+      .toSeq.sorted, "every alert the sink accepted is sent exactly once")
+    // the failure lands on the alert's handled entry too
+    val alerts = result.alerts.collect()
+    val u3 = alerts.find(_.getAs[String]("actor") == "u3").get
+    assert(u3.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("handled")
+      .map(_.getAs[Boolean]("success")) == Seq(false))
+    assert(log.entries.last.query_name == "alert_dispatch" &&
+      log.entries.last.inserted == 3 && log.entries.last.error.isEmpty)
+    // the run's results are read back, not re-dispatched
+    result.alerts.collect()
+    result.store.collect()
+    result.handlerResults.collect()
+    assert(MemorySink.drain(buf).isEmpty,
+      "reading a run's frames after the run must send nothing")
+  }
+
+  test("every job of a run carries its run id in the job description") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch,
+      TimeUnit}
+    val SPARK_JOB_DESCRIPTION = "spark.job.description"
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val marker = s"runner-marker-${System.nanoTime()}"
+    val descs = new ConcurrentLinkedQueue[String]()
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val d = Option(e.properties)
+          .flatMap(p => Option(p.getProperty(SPARK_JOB_DESCRIPTION)))
+          .getOrElse("")
+        if (d == marker) markerSeen.countDown() else descs.add(d)
+      }
+    }
+    val buf = s"runner-jobs-${System.nanoTime()}"
+    val log = RunLog.newRun()
+    sc.setJobGroup("runner-spec-group", "the caller's group")
+    sc.setJobDescription("the caller's description")
+    sc.addSparkListener(listener)
+    try {
+      Runner.runAlerts(
+        events = mkEvents,
+        rules = Seq(
+          rule("errors", col("event_type") === "error"),
+          rule("logins", col("event_type") === "login")),
+        idCol = col("event_id"),
+        suppressions = Seq(SuppressionRule("squelch_u1",
+          alerts => alerts.filter(col("actor") === "u1").select("alert_id"))),
+        sinks = Seq(new MemorySink(buf)),
+        cfg = RunConfig("2024-01-01 00:00:00", "2024-01-02 00:00:00",
+          alertTimeS = 0L, defaultHandler = "memory"),
+        log = log)
+      assert(sc.getLocalProperty(SPARK_JOB_DESCRIPTION) ==
+        "the caller's description")
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "runner-spec-group")
+      // job starts arrive in order: once the marker job's has, every
+      // job the run started has been recorded
+      sc.setJobDescription(marker)
+      sc.parallelize(Seq(1)).count()
+      assert(markerSeen.await(30, TimeUnit.SECONDS))
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.clearJobGroup()
+      sc.setJobDescription(null)
+      MemorySink.drain(buf)
+    }
+    val seen = descs.toArray(Array.empty[String]).toSeq
+    val prefix = s"runAlerts ${log.runId}: "
+    assert(seen.nonEmpty && seen.forall(_.startsWith(prefix)), seen)
+    assert(seen.map(_.stripPrefix(prefix)).distinct == Seq("merge", "dispatch"))
   }
 }
