@@ -197,11 +197,9 @@ object Engine {
       // noisy-actor suppression keyed on the ACTOR, not the alert id:
       // the suppression predicate is per-actor, so the alert set feeds
       // exactly two consumers — the per-actor profile (map-side partial
-      // agg, tiny shuffle) and one broadcast left join on actor. The
-      // pre-r11 shape selected the suppressed alert IDS first and then
-      // re-joined them back, which cost a third scan AND broadcast
-      // O(alerts) ids; suppressOnKey broadcasts O(noisy actors) —
-      // bounded by |alerts|/threshold — the shape that survives 100 TB.
+      // agg, tiny shuffle) and one broadcast existence test on actor,
+      // whose build side is O(noisy actors) — bounded by
+      // |alerts|/threshold — not one id per suppressed alert.
       // The two consumers read the projected rule scan DIRECTLY: both
       // scans run inside ONE job (the broadcast build and the probe
       // side schedule in parallel), which round-18 A/B measured faster
@@ -214,9 +212,8 @@ object Engine {
       val noisy = a.groupBy(col("actor"))
         .agg(count(lit(1)).as("n")).filter(col("n") >= 8)
         .select(col("actor"))
-      RuleEngine.suppressOnKey(a, noisy, "actor", "noisy_actor_squelch")
-        .select(col("alert_id"), col("actor"), col("suppressed"),
-          col("suppression_rule"))
+      RuleEngine.suppressOnKey(RuleEngine.unsuppressed(a), noisy, "actor",
+          "noisy_actor_squelch")
         .orderBy(col("alert_id"))
     }),
 

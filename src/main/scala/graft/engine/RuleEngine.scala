@@ -259,38 +259,38 @@ object RuleEngine {
             coalesce(col("n.counter"), lit(0L))).as("counter"): _*)
   }
 
-  /** Suppression: mark alerts matched by a suppression-rule output
-    * (a set of alert ids). Suppression sets are tiny relative to the
-    * alert stream → broadcast join, no shuffle of the big side.
-    * Ref: alert_suppressions_runner.py:15-38. */
-  def suppress(
-      alerts: DataFrame,
-      suppressedIds: DataFrame,
-      ruleName: String): DataFrame =
-    suppressOnKey(alerts, suppressedIds, "alert_id", ruleName)
+  /** The suppression columns of a frame no rule has flagged yet:
+    * `suppressed` false and `suppression_rule` null. */
+  def unsuppressed(frame: DataFrame): DataFrame =
+    frame.withColumn("suppressed", lit(false))
+      .withColumn("suppression_rule", lit(null).cast("string"))
 
-  /** Suppression keyed on an arbitrary column. When a suppression rule
-    * is really a predicate over an alert ATTRIBUTE (actor, source ip,
-    * rule name, ...), suppressing on that key broadcasts the attribute
-    * set — bounded by the attribute's cardinality — instead of blowing
-    * the id set up to one row per suppressed ALERT and broadcasting
-    * O(alerts) ids. Same reference semantics (an alert is suppressed iff
-    * a suppression query selected it; alert_suppressions_runner.py:15-38)
-    * — the selection is just factored through its key. */
+  /** One suppression rule's flags over a frame that already carries
+    * `suppressed` / `suppression_rule` ([[unsuppressed]]): a row is hit
+    * iff its `keyCol` is among the rule's `suppressedKeys`, and the first
+    * rule that hits a row names it (ref: alert_suppressions_runner.py:
+    * 15-38, one UPDATE per rule). Alerts and violations key on their id;
+    * when a rule is really a predicate over an ATTRIBUTE (actor, source
+    * ip, ...), keying on that attribute broadcasts a set bounded by its
+    * cardinality instead of one id per suppressed row. The hit test is
+    * an existence test against the broadcast keys, so duplicates need no
+    * `distinct` and the flagged side is never shuffled. IN is
+    * three-valued: a NULL among the keys makes a non-matching key's test
+    * NULL, not false (Spark's existence-join rewrite happens to return
+    * false), so it is coalesced to false. */
   def suppressOnKey(
-      alerts: DataFrame,
+      flagged: DataFrame,
       suppressedKeys: DataFrame,
       keyCol: String,
       ruleName: String): DataFrame = {
-    val sup = broadcast(
-      suppressedKeys.select(col(keyCol).as("__sup_key")).distinct())
-    alerts
-      .join(sup, alerts(keyCol) === sup("__sup_key"), "left")
-      .withColumn("suppressed", col("__sup_key").isNotNull)
-      .withColumn(
-        "suppression_rule",
-        when(col("__sup_key").isNotNull, lit(ruleName)))
-      .drop("__sup_key")
+    val hit = coalesce(
+      col(keyCol).isin(broadcast(suppressedKeys.select(keyCol))), lit(false))
+    flagged.withColumn("__sup_hit", hit)
+      .withColumn("suppression_rule",
+        when(!col("suppressed") && col("__sup_hit"), lit(ruleName))
+          .otherwise(col("suppression_rule")))
+      .withColumn("suppressed", col("suppressed") || col("__sup_hit"))
+      .drop("__sup_hit")
   }
 
   /** Correlation: alerts from the same actor whose event times chain

@@ -45,22 +45,27 @@ class RunLog(val runId: String) { // non-final: specs override flush to
       error)
   }
 
-  /** Run an alert/violation rule stage: materializes the stage output
-    * count (the INSERTED row count) and wall time. Errors are recorded
-    * with zero counts, matching record_metadata's ERROR path, and
-    * rethrown. */
-  def timedInsert(queryName: String)(stage: => DataFrame): DataFrame = {
+  /** Runs a stage from its start time: on failure records `queryName`'s
+    * ERROR row with zero counts, matching record_metadata's ERROR path,
+    * and rethrows. */
+  private def recordingError[T](queryName: String)(stage: Long => T): T = {
     val t0 = System.currentTimeMillis()
-    try {
-      val df = stage
-      val n = df.count()
-      record(queryName, t0, System.currentTimeMillis(), inserted = n)
-      df
-    } catch {
+    try stage(t0) catch {
       case e: Exception =>
         record(queryName, t0, System.currentTimeMillis(),
           error = Some(String.valueOf(e.getMessage)))
         throw e
+    }
+  }
+
+  /** Run an alert/violation rule stage: materializes the stage output
+    * count (the INSERTED row count) and wall time. */
+  def timedInsert(queryName: String)(stage: => DataFrame): DataFrame = {
+    recordingError(queryName) { t0 =>
+      val df = stage
+      val n = df.count()
+      record(queryName, t0, System.currentTimeMillis(), inserted = n)
+      df
     }
   }
 
@@ -71,8 +76,7 @@ class RunLog(val runId: String) { // non-final: specs override flush to
     * are not re-attributed. PASSED is the rows still unsuppressed after
     * this stage. */
   def timedSuppress(queryName: String)(stage: => DataFrame): DataFrame = {
-    val t0 = System.currentTimeMillis()
-    try {
+    recordingError(queryName) { t0 =>
       val df = stage
       val counts = df.groupBy().agg(
         org.apache.spark.sql.functions.count_if(
@@ -83,11 +87,6 @@ class RunLog(val runId: String) { // non-final: specs override flush to
       record(queryName, t0, System.currentTimeMillis(),
         suppressed = counts.getLong(0), passed = counts.getLong(1))
       df
-    } catch {
-      case e: Exception =>
-        record(queryName, t0, System.currentTimeMillis(),
-          error = Some(String.valueOf(e.getMessage)))
-        throw e
     }
   }
 
@@ -104,9 +103,10 @@ class RunLog(val runId: String) { // non-final: specs override flush to
   private def observation(queryName: String) =
     org.apache.spark.sql.Observation(s"${runId}_$queryName")
 
+  /** Datasets analyze eagerly: a broken rule (missing column etc.)
+    * throws while its stage is built, which records its ERROR row. */
   def observedInsert(queryName: String)(stage: => DataFrame): DataFrame = {
-    val t0 = System.currentTimeMillis()
-    try {
+    recordingError(queryName) { t0 =>
       val df = stage
       val obs = observation(queryName)
       synchronized {
@@ -116,14 +116,6 @@ class RunLog(val runId: String) { // non-final: specs override flush to
       df.observe(obs,
         org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.lit(1)).as("inserted"))
-    } catch {
-      // Datasets analyze eagerly: a broken rule (missing column etc.)
-      // throws HERE — record the error row (the monitoring-rules feed,
-      // like timedInsert's path) and rethrow
-      case e: Exception =>
-        record(queryName, t0, System.currentTimeMillis(),
-          error = Some(String.valueOf(e.getMessage)))
-        throw e
     }
   }
 
@@ -150,8 +142,7 @@ class RunLog(val runId: String) { // non-final: specs override flush to
 
   def observedSuppress(queryName: String)(stage: => DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, count_if}
-    val t0 = System.currentTimeMillis()
-    try {
+    recordingError(queryName) { t0 =>
       val df = stage
       val obs = observation(queryName)
       synchronized {
@@ -162,11 +153,6 @@ class RunLog(val runId: String) { // non-final: specs override flush to
       df.observe(obs,
         count_if(col("suppression_rule") === queryName).as("suppressed"),
         count_if(!col("suppressed")).as("passed"))
-    } catch {
-      case e: Exception =>
-        record(queryName, t0, System.currentTimeMillis(),
-          error = Some(String.valueOf(e.getMessage)))
-        throw e
     }
   }
 

@@ -1,14 +1,16 @@
 package graft.engine
 
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** A suppression rule: selects the alert_ids to squelch from the
-  * current alert set (ref: alert_suppressions_runner.py — each rule is
-  * a SELECT of alert ids; matched alerts are flagged with the rule
-  * name, the rest marked not-suppressed). */
+/** A suppression rule: selects the ids to squelch from the current
+  * alert set (`alert_id`) or violation set (`id`) (ref:
+  * alert_suppressions_runner.py, violation_suppressions_runner.py — each
+  * rule is a SELECT of ids; matched rows are flagged with the rule name,
+  * the rest marked not-suppressed). */
 final case class SuppressionRule(
     name: String,
     selectIds: DataFrame => DataFrame)
@@ -20,13 +22,17 @@ final case class RunConfig(
     correlationGapMinutes: Int = 60,
     defaultHandler: String = "console")
 
-/** The reference's end-to-end runner loop (src/runners/run_alerts.py:
-  * alert queries → merge → suppressions → correlation → handler
-  * dispatch, each stage recording run metadata) composed as ONE
-  * declarative pipeline over DataFrames with two actions per run: one
-  * materialization of the merged alert set and one dispatch action.
-  * Per-stage counts ride those two actions as observed metrics; they
-  * are the only driver-side values.
+/** The reference's runner loops (src/runners/run_alerts.py: alert
+  * queries → merge → suppressions → correlation → handler dispatch;
+  * violation_queries_runner.py → violation_suppressions_runner.py), each
+  * stage recording run metadata, composed as declarative pipelines over
+  * DataFrames with two actions per run. An alert run materializes the
+  * merged alert set and then runs one dispatch action; a violation run
+  * materializes the rule union and then the flagged results. Both loops
+  * share one suppression stage over the first action's small leaf and
+  * one skeleton for the actions and their degradation ([[Run]]).
+  * Per-stage counts ride the two actions as observed metrics; they are
+  * the only driver-side values.
   *
   * Failure isolation mirrors the reference's error contract
   * (alert_queries_runner.py create_alerts wraps EACH rule in its own
@@ -34,48 +40,165 @@ final case class RunConfig(
   * CONTINUES; the reference's own regression run_violations.py:28-46
   * plants a `1/0` rule and asserts the healthy rule's rows still land
   * with the broken rule's run record carrying the error). Here the
-  * fast path evaluates every rule in ONE pass over the events
-  * ([[RuleEngine.runAlertRules]]: one filter, one generator emitting a
-  * row per rule hit) inside the merge materialization, and suppression,
-  * correlation and dispatch plan over that small materialized set.
-  * Rules whose frames fail to CONSTRUCT (analysis errors: missing
-  * column, bad type) are dropped per-rule with an ERROR row before the
-  * pass is built. If either action fails at RUNTIME (a rule's
-  * projection throws mid-task: bad regex, malformed cast,
-  * divide-by-zero), the run degrades to per-rule isolation — each
+  * fast path evaluates every rule in one frame inside the first
+  * action, and the later stages plan over that small materialized set.
+  * Rules and suppressions whose frames fail to CONSTRUCT (analysis
+  * errors: missing column, bad type) are dropped one by one with an
+  * ERROR row. If either action fails at RUNTIME (a rule's projection or
+  * a suppression's selection throws mid-task: bad regex, malformed
+  * cast, divide-by-zero), the run degrades to per-rule isolation — each
   * surviving rule is probed with its own action (failing rules record
   * ERROR rows), and the pipeline re-runs on the healthy set with eager
-  * per-stage metadata. The degraded path scans each rule's events
+  * per-stage metadata. The degraded path scans each rule's input
   * individually — the correctness-over-scan-sharing trade the
   * reference's per-rule loop makes on EVERY run, paid here only when a
   * rule is actually broken.
   *
   * Every job a run starts carries the description
-  * `runAlerts <run_id>: <stage>`, so Spark's job metrics join the run's
-  * RunLog rows; the caller's job group is left alone.
+  * `runAlerts <run_id>: <stage>` (`runViolations` for violations), so
+  * Spark's job metrics join the run's RunLog rows; the caller's job
+  * group is left alone.
   */
 object Runner {
 
-  /** Marker for a failure of the fast path's two actions only (merge
-    * materialization, dispatch). The degraded per-rule path must fire
-    * for exactly this case: a rule's projection throwing mid-task
-    * inside the shared plan. Failures in later stages (log flush)
-    * happen AFTER the side-effecting dispatch already ran — degrading
-    * there would duplicate every rule's metadata row and re-send every
-    * alert, so those propagate unwrapped. */
+  /** Marker for a failure of a pass's two actions only. The degraded
+    * per-rule path must fire for exactly this case: a rule's projection
+    * throwing mid-task inside the shared plan. Failures in later stages
+    * (log flush) happen AFTER the side-effecting dispatch already ran —
+    * degrading there would duplicate every rule's metadata row and
+    * re-send every alert, so those propagate unwrapped. */
   private final class FusedPlanFailure(cause: Throwable)
     extends Exception(cause)
 
-  /** Runs `body` with every job it starts described as
-    * `runAlerts <runId>: <stage>`, then restores the caller's
-    * description. */
-  private def described[T](spark: org.apache.spark.sql.SparkSession,
-      runId: String, stage: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"runAlerts $runId: $stage")
-    try body finally sc.setJobDescription(prev)
+  /** One run of a loop: the stages its pipeline is built from, and the
+    * skeleton that runs the pipeline fused, then degraded if one of its
+    * actions fails ([[fusedOrDegraded]]). */
+  private final class Run(spark: SparkSession, log: RunLog, loop: String) {
+    /** Per-stage metadata: observed on the fast pass (metrics ride its
+      * two actions), eager on the degraded pass (one action per stage,
+      * each stage individually isolable). */
+    private var observed = true
+    /** Suppressions that recorded their ERROR row this run. */
+    private val failed = mutable.Set.empty[SuppressionRule]
+    /** Releases of the cached frames the current pass holds. */
+    private val held = mutable.ArrayBuffer.empty[() => Unit]
+
+    /** Runs `body` with every job it starts described as
+      * `<loop> <runId>: <stage>`, then restores the caller's
+      * description. */
+    def stage[T](name: String)(body: => T): T = {
+      val sc = spark.sparkContext
+      val prev = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"$loop ${log.runId}: $name")
+      try body finally sc.setJobDescription(prev)
+    }
+
+    /** One of a pass's two actions: its failure is the fused-plan
+      * failure the run degrades on, and releases the pass's caches. */
+    def action[T](name: String)(body: => T): T =
+      try stage(name)(body) catch {
+        case NonFatal(e) =>
+          release()
+          throw new FusedPlanFailure(e)
+      }
+
+    /** Registers how to drop a cache the pass filled. On success the
+      * caches stay for the returned frames' consumers. */
+    def hold(release: => Unit): Unit = held += (() => release)
+
+    private def release(): Unit = {
+      held.foreach(_())
+      held.clear()
+    }
+
+    def insert(name: String)(stage: => DataFrame): DataFrame =
+      if (observed) log.observedInsert(name)(stage)
+      else log.timedInsert(name)(stage)
+
+    private def suppressStage(name: String)(stage: => DataFrame): DataFrame =
+      if (observed) log.observedSuppress(name)(stage)
+      else log.timedSuppress(name)(stage)
+
+    /** The loops' one suppression stage: every rule in order over
+      * `leaf`, keyed on `keyCol`, first matching rule wins (ref:
+      * alert_suppressions_runner runs each rule's UPDATE in its own
+      * try/except — a broken suppression records an ERROR row and is
+      * skipped, the set passes through unflagged by it). A rule selects
+      * its keys from `plain`, the same flags without the stages'
+      * observe() nodes: Spark keeps one count per observation name, the
+      * last instance's (a subquery's), so a rule reading part of the set
+      * (a limit) would overwrite a stage's count. A rule that failed on
+      * the fast pass is skipped on the degraded one, so it records one
+      * ERROR row per run. */
+    def suppress(leaf: DataFrame, rules: Seq[SuppressionRule],
+        keyCol: String): DataFrame = {
+      val unflagged = RuleEngine.unsuppressed(leaf)
+      rules.filterNot(failed).foldLeft((unflagged, unflagged)) {
+        case ((acc, plain), rule) =>
+          try {
+            // first evaluated inside the stage, which records the ERROR
+            // row of a rule broken at analysis
+            lazy val keys = rule.selectIds(plain)
+            def flag(f: DataFrame) =
+              RuleEngine.suppressOnKey(f, keys, keyCol, rule.name)
+            (suppressStage(rule.name)(flag(acc)), flag(plain))
+          } catch {
+            case NonFatal(_) => // ERROR row recorded; skip
+              failed += rule
+              (acc, plain)
+          }
+      }._1
+    }
+
+    /** Runs `pipeline` over `fused`, every constructed rule in one frame.
+      * If one of its actions fails, the pending observations can never
+      * resolve and are discarded; each rule in `probes` is then run with
+      * its own action — the broken rule records its ERROR row (ref:
+      * per-rule try/except), everyone else real counts — and the
+      * pipeline re-runs on the survivors with eager per-stage metadata.
+      * Rules that already failed construction keep that ERROR row (one
+      * metadata row per rule per run, like the reference). A second
+      * action failure is final and surfaces its real cause. */
+    def fusedOrDegraded[R](fused: DataFrame,
+        probes: Seq[(String, () => DataFrame)], empty: => DataFrame)(
+        pipeline: DataFrame => R): R = {
+      val result =
+        try pipeline(fused)
+        catch {
+          case _: FusedPlanFailure =>
+            log.discardPending()
+            observed = false
+            // the probe must evaluate EVERY column, not just count rows —
+            // a bare count() lets column pruning skip the very projection
+            // that threw (the bomb would re-enter the pipeline and fail
+            // it again downstream). Materialize.frame stores full rows,
+            // so a broken projection throws here, inside this rule's own
+            // probe; healthy rules re-enter the pipeline pre-materialized.
+            val survivors = probes.flatMap { case (name, frame) =>
+              try Some(stage(s"probe $name")(log.timedInsert(name)(
+                graft.Materialize.frame(frame()))))
+              catch { case NonFatal(_) => None }
+            }
+            // the pipeline's first action checkpoints what it reads of
+            // the survivors, so their blocks are dropped however it ends
+            try pipeline(unionOr(survivors, empty))
+            catch { case f: FusedPlanFailure => throw f.getCause }
+            finally survivors.foreach(graft.Materialize.release)
+        }
+      // outside the degradation scope (see FusedPlanFailure); nothing
+      // is pending after degradation, whose rows were recorded eagerly
+      try log.flush()
+      catch {
+        case NonFatal(e) =>
+          release()
+          throw e
+      }
+      result
+    }
   }
+
+  private def unionOr(frames: Seq[DataFrame], empty: => DataFrame) =
+    if (frames.isEmpty) empty else frames.reduce(_.unionByName(_))
 
   final case class AlertRunResult(
       alerts: DataFrame,
@@ -129,157 +252,58 @@ object Runner {
           false
       }
     }
-    val alerts =
+    val fused =
       if (constructed.isEmpty) emptyAlerts(events, idCol, cfg)
       else log.observedInserts(constructed.map(_.name), "rule_pos")(
         RuleEngine.runAlertRules(events, constructed, idCol, cfg.fromTs,
           cfg.toTsExclusive, cfg.alertTimeS)).drop("rule_pos")
 
-    try pipeline(alerts, suppressions, sinks, cfg, log, observed = true)
-    catch {
-      case _: FusedPlanFailure =>
-        // a rule's projection threw at RUNTIME inside the fused plan.
-        // The pending observations can never resolve — discard them —
-        // then probe each constructed rule with its own action: the
-        // broken rule records its ERROR row (ref: per-rule try/except),
-        // everyone else records real counts, and the pipeline re-runs
-        // on the survivors with eager per-stage metadata. Rules that
-        // already failed construction keep their pass-1 ERROR row (one
-        // metadata row per rule per run, like the reference).
-        log.discardPending()
-        // the probe must evaluate EVERY column, not just count rows —
-        // a bare count() lets column pruning skip the very projection
-        // that threw (the bomb would re-enter the pipeline and fail it
-        // again downstream). Materialize.frame stores full rows, so a
-        // broken projection throws here, inside this rule's own probe;
-        // healthy rules re-enter the pipeline pre-materialized.
-        val survivors = constructed.flatMap { r =>
-          try Some(described(events.sparkSession, log.runId,
-            s"probe ${r.name}")(log.timedInsert(r.name)(
-              graft.Materialize.frame(ruleFrame(r)))))
-          catch { case NonFatal(_) => None }
-        }
-        val healthy =
-          if (survivors.isEmpty) emptyAlerts(events, idCol, cfg)
-          else survivors.reduce(_.unionByName(_))
-        try pipeline(healthy, suppressions, sinks, cfg, log,
-          observed = false)
-        catch { // a second action failure (e.g. a broken sink set)
-          // is final — surface the real cause, not the marker
-          case f: FusedPlanFailure => throw f.getCause
-        }
-    }
-  }
+    val run = new Run(events.sparkSession, log, "runAlerts")
+    run.fusedOrDegraded(fused,
+        constructed.map(r => r.name -> (() => ruleFrame(r))),
+        emptyAlerts(events, idCol, cfg)) { alerts =>
+      // 2. merge/dedup (ref: MERGE_ALERTS), materialized eagerly: the
+      //    run's first action. It runs the rule pass and the merge once
+      //    and delivers every rule's and the merge's observed count;
+      //    every later frame plans over its small materialized leaf, not
+      //    the rule pass.
+      val merged = run.action("merge")(graft.Materialize.frame(
+        run.insert("alert_merge")(RuleEngine.mergeAlerts(alerts))))
+      run.hold(graft.Materialize.release(merged))
 
-  /** merge → suppress → correlate → dispatch over an assembled alert
-    * set, with per-stage metadata either observed (fast path: metrics
-    * ride the two actions) or eager (degraded path: one action per
-    * stage, each stage individually isolable). */
-  private def pipeline(
-      alerts: DataFrame,
-      suppressions: Seq[SuppressionRule],
-      sinks: Seq[AlertSink],
-      cfg: RunConfig,
-      log: RunLog,
-      observed: Boolean): AlertRunResult = {
+      // 3. suppression rules: the run's results table, read by
+      //    correlate and returned
+      val suppressed =
+        run.stage("suppress")(run.suppress(merged, suppressions, "alert_id"))
 
-    def insertStage(name: String)(stage: => DataFrame): DataFrame =
-      if (observed) log.observedInsert(name)(stage)
-      else log.timedInsert(name)(stage)
-    def suppressStage(name: String)(stage: => DataFrame): DataFrame =
-      if (observed) log.observedSuppress(name)(stage)
-      else log.timedSuppress(name)(stage)
-    def stage[T](name: String)(body: => T): T =
-      described(alerts.sparkSession, log.runId, name)(body)
+      // 4. correlation over the live (non-suppressed) alerts (ref:
+      //    alert_processor processes unsuppressed alerts); their count
+      //    is the alert_dispatch row
+      val live = run.stage("dispatch")(run.insert("alert_dispatch")(
+        RuleEngine.correlate(suppressed.filter(!col("suppressed")),
+          cfg.correlationGapMinutes)))
 
-    // 2. merge/dedup (ref: MERGE_ALERTS), materialized eagerly: the
-    //    run's first action. It runs the rule pass and the merge once
-    //    and delivers every rule's and the merge's observed count;
-    //    every later frame plans over its small materialized leaf, not
-    //    the rule pass. A bomb projection throws here, so its failure
-    //    is the fused-plan failure the caller degrades on.
-    val merged =
-      try stage("merge")(graft.Materialize.frame(
-        insertStage("alert_merge")(RuleEngine.mergeAlerts(alerts))))
-      catch { case NonFatal(e) => throw new FusedPlanFailure(e) }
-
-    // 3. suppression rules, first matching rule wins (ref:
-    //    alert_suppressions_runner runs each rule's UPDATE in its own
-    //    try/except — a broken suppression records an ERROR row and is
-    //    skipped, the alert set passes through unflagged by it). A
-    //    rule's hits are an existence test against its broadcast ids.
-    //    IN is three-valued: a NULL among the ids makes a non-matching
-    //    alert_id's test NULL, not false (Spark's existence-join rewrite
-    //    happens to return false), so it is coalesced to false.
-    def flag(acc: DataFrame, name: String, ids: DataFrame): DataFrame =
-      acc.withColumn("__sup_hit",
-          coalesce(col("alert_id").isin(ids), lit(false)))
-        .withColumn("suppression_rule",
-          when(!col("suppressed") && col("__sup_hit"), lit(name))
-            .otherwise(col("suppression_rule")))
-        .withColumn("suppressed", col("suppressed") || col("__sup_hit"))
-        .drop("__sup_hit")
-    // A rule selects its ids from `plain`, the same flags without the
-    // earlier stages' observe() nodes: Spark keeps one count per
-    // observation name, the last instance's (a subquery's), so a rule
-    // reading part of the set (a limit) would overwrite a stage's count.
-    val unflagged = merged.withColumn("suppressed", lit(false))
-      .withColumn("suppression_rule", lit(null).cast("string"))
-    val (suppressed, _) = stage("suppress")(
-      suppressions.foldLeft((unflagged, unflagged)) {
-        case ((acc, plain), rule) =>
-          try {
-            // first evaluated inside the stage, which records the ERROR
-            // row of a rule broken at analysis
-            lazy val ids = broadcast(rule.selectIds(plain).select("alert_id"))
-            (suppressStage(rule.name)(flag(acc, rule.name, ids)),
-              flag(plain, rule.name, ids))
-          } catch { case NonFatal(_) => (acc, plain) } // ERROR row; skip
-      }) // the run's results table: read by correlate + returned
-
-    // 4. correlation over the live (non-suppressed) alerts (ref:
-    //    alert_processor processes unsuppressed alerts); their count is
-    //    the alert_dispatch row
-    val live = stage("dispatch")(insertStage("alert_dispatch")(
-      RuleEngine.correlate(suppressed.filter(!col("suppressed")),
-        cfg.correlationGapMinutes)))
-
-    // 5. handler fan-out on live alerts + per-handler results joined
-    //    back (ref: alert_dispatcher.main + record_status). Dispatch is
-    //    side-effecting and AT-LEAST-ONCE, like the reference's poll
-    //    loop: the persisted results make the common path single-send,
-    //    but cache eviction, task retry, or speculation can re-run a
-    //    partition and re-invoke send — external handlers must dedupe on
-    //    (alert_id, handler), which every HandlerResult carries.
-    val results = Dispatcher.dispatch(live, sinks, cfg.defaultHandler)
-    def release(): Unit = {
-      results.unpersist(blocking = false)
-      graft.Materialize.release(merged)
-    }
-    // the run's second and last action: one noop write fills the
-    // results cache (suppress → correlate → dispatch run once) and
-    // delivers the suppression and alert_dispatch counts. Its failure
-    // is a fused-plan failure too; the caches are released first.
-    try stage("dispatch") {
-      results.persist()
-      results.write.format("noop").mode("overwrite").save()
-    } catch {
-      case NonFatal(e) =>
-        release()
-        throw new FusedPlanFailure(e)
-    }
-    // post-terminal failures (flush) propagate WITHOUT degradation —
-    // but must not strand the run's blocks, which on success stay for
-    // the returned frames' consumers. `alerts` stays lazy: it re-reads
-    // the cached results, so collecting it sends nothing.
-    try {
-      log.flush()
+      // 5. handler fan-out on live alerts + per-handler results joined
+      //    back (ref: alert_dispatcher.main + record_status). Dispatch
+      //    is side-effecting and AT-LEAST-ONCE, like the reference's
+      //    poll loop: the persisted results make the common path
+      //    single-send, but cache eviction, task retry, or speculation
+      //    can re-run a partition and re-invoke send — external handlers
+      //    must dedupe on (alert_id, handler), which every HandlerResult
+      //    carries.
+      val results = Dispatcher.dispatch(live, sinks, cfg.defaultHandler)
+      run.hold(results.unpersist(blocking = false))
+      // the run's second and last action: one noop write fills the
+      // results cache (suppress → correlate → dispatch run once) and
+      // delivers the suppression and alert_dispatch counts. `alerts`
+      // stays lazy: it re-reads the cached results, so collecting it
+      // sends nothing.
+      run.action("dispatch") {
+        results.persist()
+        results.write.format("noop").mode("overwrite").save()
+      }
       AlertRunResult(Dispatcher.recordStatus(live, results), suppressed,
         results)
-    } catch {
-      case NonFatal(e) =>
-        release()
-        throw e
     }
   }
 
@@ -294,19 +318,21 @@ object Runner {
 
   /** The violation runner loop (ref: violation_queries_runner.py +
     * violation_suppressions_runner.py): each rule's grouped input →
-    * identity-hashed violations → suppression flags. Like runAlerts,
-    * stage counts ride the plan via observe(); the returned results
-    * table is materialized ONCE (that materialization is the terminal
-    * action resolving every stage metric), so no rule input is scanned
-    * twice for metadata. Failure isolation mirrors run_violations.py's
-    * invalid-rule regression: a rule broken at analysis OR runtime
-    * yields an ERROR metadata row while every other rule's violations
-    * land. */
+    * identity-hashed violations → suppression flags, with the same two
+    * actions, suppression stage and degradation as runAlerts. The first
+    * action materializes the rule union and delivers every rule's
+    * count; suppression plans over that leaf, so no rule input is
+    * scanned twice; the second materializes the returned results table
+    * and delivers every suppression's count. Failure isolation mirrors
+    * run_violations.py's invalid-rule regression: a rule broken at
+    * analysis OR runtime yields an ERROR metadata row while every other
+    * rule's violations land. */
   def runViolations(
       ruleInputs: Seq[(ViolationRule, DataFrame)],
       suppressions: Seq[SuppressionRule],
       log: RunLog): DataFrame = {
     require(ruleInputs.nonEmpty, "runViolations needs at least one rule")
+    lazy val empty = emptyViolations(ruleInputs.head._2)
 
     val constructed = ruleInputs.flatMap { case (rule, grouped) =>
       try Some((rule, grouped,
@@ -315,62 +341,20 @@ object Runner {
       catch { case NonFatal(_) => None } // ERROR row already recorded
     }
 
-    def downstream(violations: DataFrame, observed: Boolean): DataFrame = {
-      def suppressStage(name: String)(stage: => DataFrame): DataFrame =
-        if (observed) log.observedSuppress(name)(stage)
-        else log.timedSuppress(name)(stage)
-      val flagged = suppressions.foldLeft(
-        violations.withColumn("suppressed", lit(false))
-          .withColumn("suppression_rule", lit(null).cast("string"))) {
-        case (acc, rule) =>
-          try {
-            suppressStage(rule.name) {
-              val ids = broadcast(rule.selectIds(acc)
-                .select(col("id").as("__sup_id")).distinct())
-              acc.join(ids, acc("id") === ids("__sup_id"), "left")
-                .withColumn("suppression_rule",
-                  when(!col("suppressed") && col("__sup_id").isNotNull,
-                    lit(rule.name)).otherwise(col("suppression_rule")))
-                .withColumn("suppressed",
-                  col("suppressed") || col("__sup_id").isNotNull)
-                .drop("__sup_id")
-            }
-          } catch { case NonFatal(_) => acc }
-      }
-      // the terminal action resolving every observed stage metric; on
-      // the fused path its failure is marked so ONLY it (a rule's
-      // projection throwing mid-task) can trigger degradation
-      if (observed)
-        try flagged.transform(graft.Materialize.frame)
-        catch { case NonFatal(e) => throw new FusedPlanFailure(e) }
-      else flagged.transform(graft.Materialize.frame)
+    val run = new Run(ruleInputs.head._2.sparkSession, log, "runViolations")
+    run.fusedOrDegraded(unionOr(constructed.map(_._3), empty),
+        constructed.map { case (rule, grouped, _) =>
+          rule.name -> (() => RuleEngine.runViolationRule(grouped, rule)) },
+        empty) { violations =>
+      val union = run.action("rules")(graft.Materialize.frame(violations))
+      run.hold(graft.Materialize.release(union))
+      val flagged =
+        run.stage("suppress")(run.suppress(union, suppressions, "id"))
+      val out = run.action("results")(graft.Materialize.frame(flagged))
+      run.hold(graft.Materialize.release(out))
+      // `out` is a truncated lineage: nothing reads the union any more
+      graft.Materialize.release(union)
+      out
     }
-
-    val union =
-      if (constructed.isEmpty) emptyViolations(ruleInputs.head._2)
-      else constructed.map(_._3).reduce(_.unionByName(_))
-    val out = try downstream(union, observed = true) catch {
-      case _: FusedPlanFailure =>
-        // runtime failure inside the fused plan: degrade to per-rule
-        // isolation (ref: violation_queries_runner per-rule try/except)
-        log.discardPending()
-        // full-row probe, not count(): see runAlerts — pruning would
-        // skip the broken projection and re-admit the bomb
-        val survivors = constructed.flatMap { case (rule, grouped, _) =>
-          try Some(log.timedInsert(rule.name)(graft.Materialize.frame(
-            RuleEngine.runViolationRule(grouped, rule))))
-          catch { case NonFatal(_) => None }
-        }
-        val healthy =
-          if (survivors.isEmpty) emptyViolations(ruleInputs.head._2)
-          else survivors.reduce(_.unionByName(_))
-        downstream(healthy, observed = false)
-    }
-    // flush OUTSIDE the degradation scope (a flush-time failure after a
-    // successful terminal action must propagate, not duplicate every
-    // rule's metadata via a re-run); no-op on the degraded path, whose
-    // pending observations were discarded and rows recorded eagerly
-    log.flush()
-    out
   }
 }

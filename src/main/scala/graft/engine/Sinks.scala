@@ -599,16 +599,4 @@ object Dispatcher {
         struct(col("handler"), col("success"), col("details"))).as("handled"))
     alerts.join(agg, Seq("alert_id"), "left")
   }
-
-  /** Warehouse-style batch destination: deliver a whole routed subset
-    * as one distributed parquet append (per-row send would be wrong for
-    * a columnar store). Returns one result row per alert. */
-  def deliverParquet(
-      alerts: DataFrame,
-      path: String): Dataset[HandlerResult] = {
-    alerts.write.mode("append").parquet(path)
-    implicit val enc = Encoders.product[HandlerResult]
-    alerts.select(col("alert_id").cast("string")).as[String](Encoders.STRING)
-      .map(id => HandlerResult(id, "parquet", success = true, path))
-  }
 }

@@ -42,24 +42,6 @@ object StreamingAlerts {
         rule.severity.as("severity"))
       .withWatermark("event_time", watermark)
 
-  /** #44b streaming suppression: the batch suppress step as a
-    * stream×static broadcast join — the static suppression set is tiny
-    * and re-read per micro-batch, so rule updates take effect without
-    * restarting the query. */
-  def suppressStream(
-      alerts: DataFrame,
-      suppressedIds: DataFrame,
-      ruleName: String): DataFrame = {
-    val sup = org.apache.spark.sql.functions.broadcast(
-      suppressedIds.select(col("alert_id").as("__sup_id")).distinct())
-    alerts
-      .join(sup, alerts("alert_id") === sup("__sup_id"), "left")
-      .withColumn("suppressed", col("__sup_id").isNotNull)
-      .withColumn("suppression_rule",
-        when(col("__sup_id").isNotNull, lit(ruleName)))
-      .drop("__sup_id")
-  }
-
   /** #45 sliding-window baseline counts with watermark (streaming
     * analogue of Baselines.hourly). */
   def windowedCounts(

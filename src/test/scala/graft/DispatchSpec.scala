@@ -183,9 +183,9 @@ class DispatchSpec extends SparkSuite {
     // the log stage name must match the rule name stamped into
     // suppression_rule — timedSuppress counts only THIS rule's hits
     log.timedSuppress("errors_suppress") {
-      RuleEngine.suppress(errors,
+      RuleEngine.suppressOnKey(RuleEngine.unsuppressed(errors),
         errors.filter(col("actor") === "u1").select("alert_id"),
-        "errors_suppress")
+        "alert_id", "errors_suppress")
     }
 
     val rows = log.entries

@@ -203,19 +203,20 @@ class RuleEngineSpec extends SparkSuite {
 
   test("suppress flags exactly the given ids") {
     val sup = alerts.filter(col("actor") === "u3").select("alert_id")
-    val out = RuleEngine.suppress(alerts, sup, "squelch1")
+    val out = RuleEngine.suppressOnKey(RuleEngine.unsuppressed(alerts), sup,
+      "alert_id", "squelch1")
     assert(out.filter(col("suppressed")).count() == 1)
     assert(out.filter(col("suppression_rule") === "squelch1").count() == 1)
     assert(out.filter(!col("suppressed")).count() == 3)
   }
 
   test("suppressOnKey on actor equals id-based suppress of that actor's alerts") {
-    val byKey = RuleEngine.suppressOnKey(
-      alerts, alerts.filter(col("actor") === "u1").select("actor"),
+    val byKey = RuleEngine.suppressOnKey(RuleEngine.unsuppressed(alerts),
+      alerts.filter(col("actor") === "u1").select("actor"),
       "actor", "squelch2")
-    val byId = RuleEngine.suppress(
-      alerts, alerts.filter(col("actor") === "u1").select("alert_id"),
-      "squelch2")
+    val byId = RuleEngine.suppressOnKey(RuleEngine.unsuppressed(alerts),
+      alerts.filter(col("actor") === "u1").select("alert_id"),
+      "alert_id", "squelch2")
     val cols = Seq("alert_id", "suppressed", "suppression_rule")
     assert(byKey.select(cols.map(col): _*).orderBy("alert_id").collect().toSeq ==
       byId.select(cols.map(col): _*).orderBy("alert_id").collect().toSeq)

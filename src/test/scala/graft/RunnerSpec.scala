@@ -472,6 +472,117 @@ class RunnerSpec extends SparkSuite {
       s"flush failure must not degrade to per-rule probes: ${log.entries}")
   }
 
+  test("violation counts hold when a suppression reads part of the set") {
+    // a suppression's selectIds reads the unobserved copy of the set, so
+    // a limit there overwrites neither the rule's nor an earlier
+    // suppression's observed count (over a grouped input, as here, the
+    // limit branch's metrics used to win)
+    import graft.engine.ViolationRule
+    val daily = (1L to 4L).map(u => (u, "2024-01-01 10:00:00")).toDF(
+        "user_id", "ts_s")
+      .groupBy(concat_ws("", lit("u"), col("user_id")).as("target_user"),
+        col("ts_s").cast("timestamp").cast("date").as("day"))
+      .agg(count(lit(1)).as("n"))
+    val vrule = ViolationRule(
+      name = "err_burst", queryId = "v1", title = "Burst",
+      predicate = col("n") >= 1,
+      target = col("target_user"),
+      owner = lit("secops"), severity = lit("medium"), day = col("day"))
+    val log = RunLog.newRun()
+    val out = Runner.runViolations(Seq(vrule -> daily), Seq(
+      SuppressionRule("allow_u1",
+        v => v.filter(col("object") === "u1").select("id")),
+      SuppressionRule("any_one", v => v.limit(1).select("id"))), log)
+    assert(out.count() == 4)
+    assert(log.entries.map(_.query_name) ==
+      Seq("err_burst", "allow_u1", "any_one"))
+    assert(log.entries.forall(_.error.isEmpty), log.entries)
+    val byName = log.entries.map(e => e.query_name -> e).toMap
+    assert(byName("err_burst").inserted == 4)
+    assert(byName("allow_u1").suppressed == 1 &&
+      byName("allow_u1").passed == 3)
+    assert(byName("any_one").suppressed + byName("any_one").passed == 3)
+  }
+
+  test("a suppression broken at analysis or at runtime records one ERROR " +
+      "row and is skipped while every other row lands, in both loops") {
+    import graft.engine.ViolationRule
+    /** One broken at analysis, one healthy, one whose selection throws
+      * mid-task, each selecting `key`. */
+    def suppressions(key: String) = Seq(
+      SuppressionRule("no_such_col",
+        _.select(col("nonexistent_column").as(key))),
+      SuppressionRule("squelch_u1",
+        _.filter(col("object") === "u1").select(key)),
+      SuppressionRule("bomb", _.select(when(length(col(key)) >= 0,
+        raise_error(lit("suppression bomb"))).otherwise(col(key)).as(key))))
+    val daily = mkEvents
+      .filter(col("event_type") === "error")
+      .groupBy(concat_ws("", lit("u"), col("user_id")).as("target_user"),
+        col("ts").cast("date").as("day"))
+      .agg(count(lit(1)).as("n"))
+    val vrule = ViolationRule(
+      name = "err_burst", queryId = "v1", title = "Burst",
+      predicate = col("n") >= 1,
+      target = col("target_user"),
+      owner = lit("secops"), severity = lit("medium"), day = col("day"))
+    val buf = s"runner-broken-sup-${System.nanoTime()}"
+
+    // (loop, id column, run returning its result rows, expected rows,
+    //  expected (inserted, suppressed, passed) of every healthy stage)
+    val legs: Seq[(String, String,
+        (Seq[SuppressionRule], RunLog) => Array[org.apache.spark.sql.Row],
+        Int, Map[String, (Long, Long, Long)])] = Seq(
+      ("runAlerts", "alert_id", { (sups, log) =>
+        val store = Runner.runAlerts(
+          events = mkEvents,
+          rules = Seq(
+            rule("errors", col("event_type") === "error"),
+            rule("logins", col("event_type") === "login")),
+          idCol = col("event_id"),
+          suppressions = sups,
+          sinks = Seq(new MemorySink(buf)),
+          cfg = RunConfig("2024-01-01 00:00:00", "2024-01-02 00:00:00",
+            alertTimeS = 0L, defaultHandler = "memory"),
+          log = log).store.collect()
+        assert(MemorySink.drain(buf).length == 2, "u2 and u3 sent once")
+        store
+      }, 3, Map("errors" -> (4L, 0L, 0L), "logins" -> (1L, 0L, 0L),
+        "alert_merge" -> (3L, 0L, 0L), "squelch_u1" -> (0L, 1L, 2L),
+        "alert_dispatch" -> (2L, 0L, 0L))),
+      ("runViolations", "id", { (sups, log) =>
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        val out = Runner.runViolations(Seq(vrule -> daily), sups, log)
+        val rows = out.collect()
+        graft.Materialize.release(out)
+        val leaked = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
+        assert(leaked.isEmpty, s"the run stranded ${leaked.size} cached " +
+          "RDD(s) besides its result")
+        rows
+      }, 2, Map("err_burst" -> (2L, 0L, 0L), "squelch_u1" -> (0L, 1L, 1L))))
+
+    legs.foreach { case (loop, key, run, nRows, counts) =>
+      val log = RunLog.newRun()
+      val rows = run(suppressions(key), log)
+      assert(rows.length == nRows, loop)
+      assert(rows.filter(_.getAs[Boolean]("suppressed"))
+        .map(_.getAs[String]("suppression_rule")).toSeq ==
+        Seq("squelch_u1"), loop)
+      val byName = log.entries.groupBy(_.query_name)
+      assert(byName.keySet == counts.keySet ++ Set("no_such_col", "bomb"),
+        s"$loop: ${log.entries}")
+      assert(byName.values.forall(_.size == 1), s"$loop: ${log.entries}")
+      assert(byName("no_such_col").head.error.nonEmpty, loop)
+      assert(byName("bomb").head.error.exists(_.contains("suppression bomb")),
+        loop)
+      counts.foreach { case (name, expected) =>
+        val r = byName(name).head
+        assert(r.error.isEmpty && (r.inserted, r.suppressed, r.passed) ==
+          expected, s"$loop: $r")
+      }
+    }
+  }
+
   test("ALL rules broken still returns an empty, well-formed run") {
     val buf = s"runner-all-bad-${System.nanoTime()}"
     val log = RunLog.newRun()

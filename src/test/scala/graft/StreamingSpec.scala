@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.engine.AlertRule
+import graft.engine.{AlertRule, RuleEngine}
 import graft.streaming.StreamingAlerts
 import graft.streaming.StreamingAlerts.{SessionEvent, SessionSummary}
 
@@ -153,7 +153,7 @@ class StreamingSpec extends SparkSuite {
     assert(stackedWms.contains("ts"), stackedWms.toString)
   }
 
-  test("suppressStream flags alerts against a static suppression set") {
+  test("suppressOnKey flags streaming alerts against a static suppression set") {
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[StreamEv]
     val alerts = StreamingAlerts.ruleStream(input.toDF(), rule, col("event_id"))
@@ -161,7 +161,8 @@ class StreamingSpec extends SparkSuite {
       // deterministic id of event 1 under rule sr1
       org.apache.spark.sql.functions.md5(lit("sr1:1")))
     val supDf = spark.range(1).select(supIds.head.as("alert_id"))
-    val q = StreamingAlerts.suppressStream(alerts, supDf, "static_squelch")
+    val q = RuleEngine.suppressOnKey(RuleEngine.unsuppressed(alerts), supDf,
+        "alert_id", "static_squelch")
       .writeStream.format("memory").queryName("sup_out")
       .outputMode(OutputMode.Append).start()
     input.addData(
@@ -175,6 +176,38 @@ class StreamingSpec extends SparkSuite {
     val sup = got.find(_.getAs[Boolean]("suppressed")).get
     assert(sup.getAs[String]("actor") == "u1")
     assert(sup.getAs[String]("suppression_rule") == "static_squelch")
+  }
+
+  test("a query restarted from its checkpoint emits no duplicate alerts") {
+    // each AvailableNow run resumes the offsets and the dedup state from
+    // the checkpoint, like every scheduled ingest cycle; the second file
+    // repeats event 1 inside the watermark
+    val root = java.nio.file.Files.createTempDirectory("graft-stream-restart")
+    val Seq(src, sink, ck) =
+      Seq("src", "sink", "ck").map(root.resolve(_).toString)
+    def arrive(evs: StreamEv*): Unit =
+      evs.toDF().coalesce(1).write.mode("append").parquet(src)
+    def cycle(): Unit =
+      StreamingAlerts.dedupStream(StreamingAlerts.ruleStream(
+          spark.readStream.schema(Seq.empty[StreamEv].toDF().schema)
+            .parquet(src), rule, col("event_id")))
+        .writeStream.format("parquet")
+        .option("path", sink).option("checkpointLocation", ck)
+        .outputMode(OutputMode.Append)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+    arrive(
+      StreamEv(1, ts("2024-01-01 10:00:00"), 1, "error", 120.0),
+      StreamEv(2, ts("2024-01-01 10:01:00"), 2, "error", 220.0))
+    cycle()
+    arrive(
+      StreamEv(1, ts("2024-01-01 10:02:00"), 1, "error", 120.0),
+      StreamEv(3, ts("2024-01-01 10:03:00"), 3, "error", 320.0))
+    cycle()
+    val ids = spark.read.parquet(sink).select("alert_id").as[String]
+      .collect().toSeq
+    assert(ids.length == 3, ids)
+    assert(ids.distinct.length == 3, ids)
   }
 
   test("dispatchStream routes each micro-batch to the sinks") {
