@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.sources.FixtureStore
+
 /** SURVEY.md §2 #32-34: similarity search over the embedding column.
   * Brute-force is the exact baseline (probe broadcast, per-partition
   * top-k via TakeOrdered — no global sort); random-hyperplane LSH is the
@@ -499,21 +501,13 @@ object Ann {
   def ensurePqStore(e: DataFrame, seeds: Seq[(Long, Array[Double])],
       cbs: Seq[(Long, Array[Double])], storeDir: String,
       sourceTag: String): Unit = {
-    graft.sources.FixtureStore.ensure(storeDir, sourceTag) { buildDir =>
+    FixtureStore.ensure(storeDir, sourceTag) { buildDir =>
       e.withColumn("cell",
           graft.functions.vec.nearestCentroid(col("v"), seeds).getField("cid"))
         .withColumn("codes", pqCodeArray(cbs))
         .write.mode("overwrite").partitionBy("cell").parquet(buildDir)
     }
     ()
-  }
-
-  /** The identity tag [[ensurePqStore]] keys a store on: the source
-    * parquet's path, byte size and mtime — regenerated testdata or a
-    * different sf dir always misses and rebuilds. */
-  def sourceTagOf(path: String): String = {
-    val f = new java.io.File(path)
-    s"$path:${f.length}:${f.lastModified}:pq-v1"
   }
 
   /** #34g `q_ann_ivf_store` — the stored-index search under the
@@ -535,12 +529,8 @@ object Ann {
     if (probeRows.isEmpty) return empty
     val probeV = probeRows.head.getSeq[Double](0).toArray
     val cbs = pqCodebookOf(e)
-    val tag = sourceTagOf(s"$dir/embeddings.parquet")
-    val storeDir = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_ivf_store_" + java.security.MessageDigest.getInstance("MD5")
-        .digest(tag.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    ).getPath
+    val tag = FixtureStore.sourceTagOf(s"$dir/embeddings.parquet") + ":pq-v1"
+    val storeDir = FixtureStore.dirFor("ivf_store", tag)
     ensurePqStore(e, seeds, cbs, storeDir, tag)
     ivfPqAnnStore(s, storeDir, probeV, seeds, cbs, excludeId = Some(0L))
   }
@@ -647,9 +637,9 @@ object Ann {
       .orderBy(col("label"), col("dim"))
 
   /** Voronoi-cell blocking for the pairwise ANN-graph operators: every
-    * vector is assigned to the nearest of `cells` seed centroids via
+    * vector is assigned to the nearest of [[Cells]] seed centroids via
     * the narrow literal-centroid projection of [[nearestSeed]], then
-    * cells above `cap` members are dropped (the [[Dedup.dropHotBuckets]]
+    * cells above [[Cap]] members are dropped (the [[Dedup.dropHotBuckets]]
     * skew hygiene — a degenerate cell with f members is f² pairs no
     * matter how good the quantizer; the count window runs over the same
     * key the downstream self-join shuffles on, co-partitioned). The
@@ -658,28 +648,35 @@ object Ann {
     * and NOTHING is broadcast: this is the shape that survives 100 TB
     * (more cells, same plan), unlike a full-table broadcast self-join
     * which dies at the 8 GB broadcast ceiling. */
-  private def cellBlocked(e: DataFrame, cells: Int, cap: Int): DataFrame = {
-    val cents = seedCentroids(e, cells)
+  private def cellBlocked(e: DataFrame): DataFrame = {
+    val cents = seedCentroids(e, Cells)
     if (cents.isEmpty)
       return e.withColumn("cell", lit(0L)).limit(0)
     Dedup.dropHotBuckets(
       e.withColumn("cell", nearestSeed(cents).getField("cid")),
-      Seq("cell"), cap)
+      Seq("cell"), Cap)
   }
+
+  /** The cell-blocked pairwise family's (knn_graph, semdedup,
+    * diverse_sample) block count — one Voronoi cell per seed, the
+    * `Cells` lowest vec_ids; the dial to raise with the data so
+    * Σ|cell|² stays bounded (§2 #83a) — and its hot-cell cap. The
+    * queries and [[oracle]]'s [[cellCte]] read these same values. */
+  private val Cells = 32
+  private val Cap = 500
 
   /** #83a k-nearest-neighbor graph: each vector's top-k same-cell
     * neighbors by cosine — the input to graph clustering, SemDeDup, and
-    * diversity sampling. Blocking is the Voronoi cell of 32 seed
+    * diversity sampling. Blocking is the Voronoi cell of [[Cells]] seed
     * centroids ([[cellBlocked]] — the IVF coarse-quantizer shape, and
-    * at 100 TB the `cells` knob scales the block count with the data);
+    * at 100 TB [[Cells]] scales the block count with the data);
     * the per-cell compare is a cell-keyed sort-merge self-join, never a
     * broadcast of the corpus (PlanShapeSpec pins this). The per-vector
     * top-k is a rank window over the candidate pairs, the same
     * TakeOrdered-per-key shape as q_topk_window. */
-  def knnGraph(s: SparkSession, dir: String, k: Int = 3,
-      cells: Int = 32, cap: Int = 500): DataFrame = {
+  def knnGraph(s: SparkSession, dir: String, k: Int = 3): DataFrame = {
     val e = withV(t(s, dir, "embeddings")).select(col("vec_id"), col("v"))
-    val blocked = cellBlocked(e, cells, cap)
+    val blocked = cellBlocked(e)
     val pairs = blocked.as("a")
       .join(blocked.as("b"),
         col("a.cell") === col("b.cell") &&
@@ -703,10 +700,10 @@ object Ann {
     * cluster); the compare is the same cell-keyed self-join as
     * [[knnGraph]] — no corpus broadcast — and the census a left join of
     * the corpus against the small dropped set. */
-  def semDedup(s: SparkSession, dir: String, tau: Double = 0.35,
-      cells: Int = 32, cap: Int = 500): DataFrame = {
+  def semDedup(s: SparkSession, dir: String,
+      tau: Double = 0.35): DataFrame = {
     val e = withV(t(s, dir, "embeddings"))
-    val blocked = cellBlocked(e.select(col("vec_id"), col("v")), cells, cap)
+    val blocked = cellBlocked(e.select(col("vec_id"), col("v")))
     val dropped = blocked.as("a")
       .join(blocked.as("b"),
         col("a.cell") === col("b.cell") &&
@@ -738,10 +735,9 @@ object Ann {
     * force a SortAggregate over every vector, the AsOf lesson) and
     * no per-cell window. min(dist) separately recovers the
     * representative's distance (it IS the argmin's distance). */
-  def diverseSample(s: SparkSession, dir: String, cells: Int = 32,
-      cap: Int = 500): DataFrame = {
+  def diverseSample(s: SparkSession, dir: String): DataFrame = {
     val e = withV(t(s, dir, "embeddings")).select(col("vec_id"), col("v"))
-    val cents = seedCentroids(e, cells)
+    val cents = seedCentroids(e, Cells)
     if (cents.isEmpty)
       return s.emptyDataFrame
         .withColumn("cell", lit(0L)).withColumn("n_vecs", lit(0L))
@@ -751,7 +747,7 @@ object Ann {
     val assigned = Dedup.dropHotBuckets(
       e.select(col("vec_id"), ns.getField("cid").as("cell"),
         ns.getField("dist").as("dist")),
-      Seq("cell"), cap)
+      Seq("cell"), Cap)
     // Packed key as DECIMAL(38,0) (the AsOf.packedKey pattern): a LONG
     // pack silently flips sign when the quantized distance reaches 2^31
     // (squared-L2 ~2.1e5) or vec_id leaves [0, 2^32) — decimal widths
@@ -795,27 +791,10 @@ object Ann {
         Num.r4(col("n_overlap") / col("n_apx")).as("recall"))
   }
 
-  /** Scale knobs for the cell-blocked pairwise family (knn_graph,
-    * semdedup, diverse_sample): `cells` is the documented block-count
-    * dial (§2 #83a — at 100 TB the block count scales with the data so
-    * Σ|cell|² stays bounded) and `cap` the hot-cell hygiene bound.
-    * The env override exists so a SCALED bench run can exercise the
-    * production shape — both the Spark queries and [[oracle]]'s
-    * cellCte read the same values, so the two engines always compute
-    * identical re-seeded semantics; unset (the driver's correctness
-    * gate), they are the fixed sf0.01 constants 32/500. */
-  private def annCells: Int =
-    sys.env.get("SPARK_GRAFT_ANN_CELLS").map(_.toInt).getOrElse(32)
-  private def annCap: Int =
-    sys.env.get("SPARK_GRAFT_ANN_CAP").map(_.toInt).getOrElse(500)
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_diverse_sample" -> ((s: SparkSession, dir: String) =>
-      diverseSample(s, dir, cells = annCells, cap = annCap)),
-    "q_knn_graph" -> ((s: SparkSession, dir: String) =>
-      knnGraph(s, dir, cells = annCells, cap = annCap)),
-    "q_semdedup" -> ((s: SparkSession, dir: String) =>
-      semDedup(s, dir, cells = annCells, cap = annCap)),
+    "q_diverse_sample" -> diverseSample _,
+    "q_knn_graph" -> ((s: SparkSession, dir: String) => knnGraph(s, dir)),
+    "q_semdedup" -> ((s: SparkSession, dir: String) => semDedup(s, dir)),
     "q_ann_bruteforce" -> bruteForce _,
     "q_ann_lsh" -> lshAnn _,
     "q_ann_recall" -> lshRecall _,
@@ -886,17 +865,17 @@ object Ann {
       |)""".stripMargin
 
   /** Shared oracle CTE chain for the cell-blocked pairwise operators:
-    * Voronoi assignment to the 32 lowest-vec_id seeds (argmin of
+    * Voronoi assignment to the [[Cells]] lowest-vec_id seeds (argmin of
     * 4dp-rounded squared L2, ties to the smallest cid — exactly
-    * [[nearestSeed]]), hot cells (> cap members) excluded, corpus
+    * [[nearestSeed]]), hot cells (> [[Cap]] members) excluded, corpus
     * re-joined to its cell. */
-  private def cellCte(cells: Int, cap: Int): String =
+  private val cellCte: String =
     s"""WITH e AS (
        |  SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
        |), d AS (
        |  SELECT vec_id, i, v[i]::DOUBLE AS x
        |  FROM e, UNNEST(generate_series(1, len(v))) t(i)
-       |), c0 AS (SELECT vec_id AS cid, i, x FROM d WHERE vec_id < $cells),
+       |), c0 AS (SELECT vec_id AS cid, i, x FROM d WHERE vec_id < $Cells),
        |assign AS (
        |  SELECT vec_id, cid AS cell FROM (
        |    SELECT d.vec_id, c.cid,
@@ -906,7 +885,7 @@ object Ann {
        |    FROM d JOIN c0 c USING (i) GROUP BY d.vec_id, c.cid
        |  ) WHERE rn = 1
        |), sized AS (
-       |  SELECT cell FROM assign GROUP BY cell HAVING count(*) <= $cap
+       |  SELECT cell FROM assign GROUP BY cell HAVING count(*) <= $Cap
        |), ec AS (
        |  SELECT e.vec_id, e.v, a.cell
        |  FROM e JOIN assign a USING (vec_id) JOIN sized USING (cell)
@@ -973,7 +952,7 @@ object Ann {
 
   def oracle: Map[String, String] = Map(
     "q_diverse_sample" ->
-      s"""${cellCte(annCells, annCap)}, dist AS (
+      s"""$cellCte, dist AS (
          |  SELECT ec.vec_id, ec.cell,
          |    round(sum((d.x - c.x) * (d.x - c.x)), 4) AS dist
          |  FROM ec
@@ -991,7 +970,7 @@ object Ann {
          |  vec_id AS rep_id, dist AS rep_dist
          |FROM ranked WHERE rn = 1 ORDER BY cell""".stripMargin,
     "q_knn_graph" ->
-      s"""${cellCte(annCells, annCap)}, p AS (
+      s"""$cellCte, p AS (
          |  SELECT a.vec_id, b.vec_id AS nbr_id,
          |    round(list_cosine_similarity(a.v, b.v), 4) AS cosine
          |  FROM ec a JOIN ec b
@@ -1006,7 +985,7 @@ object Ann {
          |WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin,
 
     "q_semdedup" ->
-      s"""${cellCte(annCells, annCap)}, dropped AS (
+      s"""$cellCte, dropped AS (
          |  SELECT DISTINCT b.vec_id AS dropped_id
          |  FROM ec a JOIN ec b
          |    ON a.cell = b.cell AND a.vec_id < b.vec_id

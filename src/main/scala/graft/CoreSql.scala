@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.sources.FixtureStore
+
 /** Core SQL analytics surface (SURVEY.md §2 #16–25): the building blocks
   * every SnowAlert query pack leans on (pack SQL files), re-expressed as
   * declarative DataFrame plans so Catalyst handles pushdown, pruning and
@@ -279,16 +281,14 @@ object CoreSql {
     * table names. */
   private def ensureBucketedFacts(
       s: SparkSession, dir: String): (String, String) = {
-    val tag = graft.Ann.sourceTagOf(s"$dir/lineitem.parquet") + ";" +
-      graft.Ann.sourceTagOf(s"$dir/orders.parquet") + s";bkt$Buckets-v1"
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(tag.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      .take(12)
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_bktfacts_$h").getPath
-    graft.sources.FixtureStore.ensure(root, tag) { buildDir =>
+    val tag = FixtureStore.sourceTagOf(s"$dir/lineitem.parquet") + ";" +
+      FixtureStore.sourceTagOf(s"$dir/orders.parquet") + s";bkt$Buckets-v1"
+    val root = FixtureStore.dirFor("bktfacts", tag)
+    // one source generation's tables: graft_bktfacts_<md5>_{li,o}
+    val name = new java.io.File(root).getName
+    FixtureStore.ensure(root, tag) { buildDir =>
       def land(df: DataFrame, sub: String, key: String): Unit = {
-        val tmpName = s"graft_bktland_${h}_$sub"
+        val tmpName = s"${name}_land_$sub"
         graft.sources.Layout.landBucketed(
           df.repartition(Buckets, col(key)), tmpName, key, Buckets,
           path = Some(s"$buildDir/$sub"))
@@ -300,8 +300,8 @@ object CoreSql {
       land(t(s, dir, "orders").select(col("o_orderkey"),
         col("o_orderpriority")), "o", "o_orderkey")
     }
-    val liT = s"graft_li_bkt_$h"
-    val oT = s"graft_o_bkt_$h"
+    val liT = s"${name}_li"
+    val oT = s"${name}_o"
     if (!s.catalog.tableExists(liT))
       s.sql(s"""CREATE TABLE $liT (l_orderkey BIGINT,
         | l_extendedprice DOUBLE, l_discount DOUBLE) USING parquet

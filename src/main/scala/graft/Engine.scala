@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.engine.{AlertRule, RuleEngine, ViolationRule}
+import graft.sources.FixtureStore
 
 /** SURVEY.md §2 #1-6: the SnowAlert rule pipeline demonstrated over the
   * `events` table, each stage with a DuckDB oracle.
@@ -53,12 +54,10 @@ object Engine {
     * The landing asserts non-null merge keys (the
     * [[graft.engine.RuleEngine.mergeIntoStoreClustered]] contract). */
   private def alertStoreFixture(s: SparkSession, dir: String): String = {
-    val tag = Ann.sourceTagOf(s"$dir/events.parquet") + ":alertstore-v2"
-    val storeDir = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_alert_store_" + java.security.MessageDigest.getInstance("MD5")
-        .digest(tag.getBytes("UTF-8")).map("%02x".format(_)).mkString).getPath
-    graft.sources.FixtureStore.ensure(storeDir, tag) { buildDir =>
+    val tag = FixtureStore.sourceTagOf(s"$dir/events.parquet") +
+      ":alertstore-v2"
+    val storeDir = FixtureStore.dirFor("alert_store", tag)
+    FixtureStore.ensure(storeDir, tag) { buildDir =>
       val merged = RuleEngine.mergeAlerts(
         alertsIn(s, dir, From, Mid, StoreTimeS))
       val nullKeys = merged.filter(
@@ -83,8 +82,7 @@ object Engine {
     * catalog dies with the JVM, the files and marker persist). */
   private def alertStoreTable(s: SparkSession, dir: String): String = {
     val root = alertStoreFixture(s, dir)
-    val h = new java.io.File(root).getName.stripPrefix("graft_alert_store_")
-    val tbl = s"graft_alert_store_bkt_$h"
+    val tbl = new java.io.File(root).getName + "_bkt"
     if (!s.catalog.tableExists(tbl)) {
       // DDL columns derive from the LIVE mergeAlerts schema (plan-only,
       // nothing executes) — a hand-written list would silently read
@@ -212,8 +210,8 @@ object Engine {
       val noisy = a.groupBy(col("actor"))
         .agg(count(lit(1)).as("n")).filter(col("n") >= 8)
         .select(col("actor"))
-      RuleEngine.suppressOnKey(RuleEngine.unsuppressed(a), noisy, "actor",
-          "noisy_actor_squelch")
+      RuleEngine.suppressOnKey(RuleEngine.unsuppressed(a), noisy,
+          Seq("actor"), "noisy_actor_squelch")
         .orderBy(col("alert_id"))
     }),
 
@@ -239,17 +237,13 @@ object Engine {
       violations(s, dir).orderBy(col("id"))),
 
     "q_violation_suppress" -> ((s, dir) => {
-      val v = violations(s, dir)
       val signupDays = t(s, dir, "events")
         .filter(col("event_type") === "signup")
         .select(
           concat_ws("", lit("user:"), col("user_id")).as("object"),
           col("ts").cast("date").as("violation_day"))
-        .distinct()
-      v.join(broadcast(signupDays.withColumn("__s", lit(1))),
-          Seq("object", "violation_day"), "left")
-        .withColumn("suppressed", col("__s").isNotNull)
-        .drop("__s")
+      RuleEngine.suppressOnKey(RuleEngine.unsuppressed(violations(s, dir)),
+          signupDays, Seq("object", "violation_day"), "signup_day")
         .select(col("id"), col("object"), col("violation_day"),
           col("suppressed"))
         .orderBy(col("id"))

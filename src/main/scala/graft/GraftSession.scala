@@ -4,10 +4,11 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session graft's drivers (Bench, Verify, Probe, StreamBench,
-  * StoreBench) and the test suite run on, so the plan Verify and
-  * PlanShapeSpec check is planned under the settings Bench times — plus
-  * the driver glue they share. */
+/** The one session graft's drivers (Bench, Verify, Probe) and the test
+  * suite run on, so the plan Verify and PlanShapeSpec check is planned
+  * under the settings Bench times — plus the driver glue they share.
+  * Its core count is the only environment variable that reaches a
+  * session; no query reads the environment (EnvReadsSpec). */
 object GraftSession {
 
   /** Local cores: SPARK_GRAFT_CPUS if set, else the JVM's processors. */

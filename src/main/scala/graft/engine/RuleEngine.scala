@@ -267,24 +267,29 @@ object RuleEngine {
 
   /** One suppression rule's flags over a frame that already carries
     * `suppressed` / `suppression_rule` ([[unsuppressed]]): a row is hit
-    * iff its `keyCol` is among the rule's `suppressedKeys`, and the first
-    * rule that hits a row names it (ref: alert_suppressions_runner.py:
-    * 15-38, one UPDATE per rule). Alerts and violations key on their id;
-    * when a rule is really a predicate over an ATTRIBUTE (actor, source
-    * ip, ...), keying on that attribute broadcasts a set bounded by its
-    * cardinality instead of one id per suppressed row. The hit test is
-    * an existence test against the broadcast keys, so duplicates need no
-    * `distinct` and the flagged side is never shuffled. IN is
-    * three-valued: a NULL among the keys makes a non-matching key's test
-    * NULL, not false (Spark's existence-join rewrite happens to return
-    * false), so it is coalesced to false. */
+    * iff its key — the `keyCols` together — is among the rule's
+    * `suppressedKeys`, and the first rule that hits a row names it (ref:
+    * alert_suppressions_runner.py:15-38, one UPDATE per rule). Alerts and
+    * violations key on their id; when a rule is really a predicate over
+    * an ATTRIBUTE (actor, source ip, ...), keying on that attribute
+    * broadcasts a set bounded by its cardinality instead of one id per
+    * suppressed row. The hit test is an existence test against the
+    * broadcast keys, so duplicates need no `distinct` and the flagged
+    * side is never shuffled; a composite key is one struct, which the
+    * analyzer unpacks into `(a, b) IN (SELECT a, b ...)`, so a NULL in
+    * any key column never matches. IN is three-valued: a NULL among the
+    * keys makes a non-matching key's test NULL, not false (Spark's
+    * existence-join rewrite happens to return false), so it is
+    * coalesced to false. */
   def suppressOnKey(
       flagged: DataFrame,
       suppressedKeys: DataFrame,
-      keyCol: String,
+      keyCols: Seq[String],
       ruleName: String): DataFrame = {
+    val keys = keyCols.map(col)
+    val key = if (keys.size == 1) keys.head else struct(keys: _*)
     val hit = coalesce(
-      col(keyCol).isin(broadcast(suppressedKeys.select(keyCol))), lit(false))
+      key.isin(broadcast(suppressedKeys.select(keys: _*))), lit(false))
     flagged.withColumn("__sup_hit", hit)
       .withColumn("suppression_rule",
         when(!col("suppressed") && col("__sup_hit"), lit(ruleName))

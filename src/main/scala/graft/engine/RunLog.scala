@@ -1,6 +1,8 @@
 package graft.engine
 
 import scala.collection.mutable
+import scala.concurrent.{Await, TimeoutException}
+import scala.concurrent.duration._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -164,8 +166,9 @@ class RunLog(val runId: String) { // non-final: specs override flush to
   def discardPending(): Unit = synchronized(pendingObs.clear())
 
   /** Resolve all observed stages into metadata rows. Must run after the
-    * pipeline's terminal action (metric delivery is asynchronous —
-    * bounded wait per stage). A stage whose subplan never executed is
+    * pipeline's terminal action: metrics arrive asynchronously, shortly
+    * after it, so flush waits for them until one shared deadline,
+    * `timeoutMs` from the call. A stage whose subplan never executed is
     * recorded as an error row rather than blocking forever. */
   def flush(timeoutMs: Long = 30000): Unit = {
     val toFlush = synchronized {
@@ -173,30 +176,22 @@ class RunLog(val runId: String) { // non-final: specs override flush to
       pendingObs.clear()
       t
     }
+    val deadline = timeoutMs.millis.fromNow
     toFlush.foreach { p =>
-      // Observation.get blocks until the observed action's metrics are
-      // delivered (asynchronously, shortly after the action) — bound it
-      // so a never-executed stage records an error instead of hanging
-      // blocking{} lets the global EC spawn a compensating thread, so a
-      // timed-out stage (its get never completes) parks a thread without
-      // starving the pool's fixed parallelism
-      val m: Map[String, Any] =
+      val observed =
         try {
-          scala.concurrent.Await.result(
-            scala.concurrent.Future(
-              scala.concurrent.blocking(p.obs.get))(
-              scala.concurrent.ExecutionContext.global),
-            scala.concurrent.duration.Duration(timeoutMs, "ms"))
-        } catch {
-          case _: java.util.concurrent.TimeoutException => Map.empty
-        }
+          val row = Await.result(p.obs.future, deadline.timeLeft)
+          Some(row.getValuesMap[Any](row.schema.fieldNames.toSeq))
+        } catch { case _: TimeoutException => None }
       val end = System.currentTimeMillis()
-      if (m.isEmpty) {
-        record(p.queryName, p.t0, end, error = Some("metrics never observed"))
-      } else {
-        val (inserted, suppressed, passed) = p.counts(m)
-        record(p.queryName, p.t0, end, inserted = inserted,
-          suppressed = suppressed, passed = passed)
+      observed match {
+        case None =>
+          record(p.queryName, p.t0, end,
+            error = Some("metrics never observed"))
+        case Some(m) =>
+          val (inserted, suppressed, passed) = p.counts(m)
+          record(p.queryName, p.t0, end, inserted = inserted,
+            suppressed = suppressed, passed = passed)
       }
     }
   }

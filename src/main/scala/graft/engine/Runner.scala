@@ -140,7 +140,7 @@ object Runner {
             // row of a rule broken at analysis
             lazy val keys = rule.selectIds(plain)
             def flag(f: DataFrame) =
-              RuleEngine.suppressOnKey(f, keys, keyCol, rule.name)
+              RuleEngine.suppressOnKey(f, keys, Seq(keyCol), rule.name)
             (suppressStage(rule.name)(flag(acc)), flag(plain))
           } catch {
             case NonFatal(_) => // ERROR row recorded; skip
@@ -200,10 +200,19 @@ object Runner {
   private def unionOr(frames: Seq[DataFrame], empty: => DataFrame) =
     if (frames.isEmpty) empty else frames.reduce(_.unionByName(_))
 
+  /** A run's frames. They read two caches the run leaves filled: the
+    * dispatch results and the merged set's checkpoint. */
   final case class AlertRunResult(
       alerts: DataFrame,
       store: DataFrame,
-      handlerResults: Dataset[HandlerResult])
+      handlerResults: Dataset[HandlerResult])(merged: DataFrame) {
+    /** Drops both caches (`store.unpersist` cannot reach the checkpoint
+      * under it). None of the three frames may be read afterwards. */
+    def release(): Unit = {
+      handlerResults.unpersist(blocking = false)
+      graft.Materialize.release(merged)
+    }
+  }
 
   /** Literal-only rule: analysis-safe on any event frame; yields the
     * alert schema with zero rows (the all-rules-broken fallback). */
@@ -303,7 +312,7 @@ object Runner {
         results.write.format("noop").mode("overwrite").save()
       }
       AlertRunResult(Dispatcher.recordStatus(live, results), suppressed,
-        results)
+        results)(merged)
     }
   }
 

@@ -35,6 +35,23 @@ object FixtureStore {
     ()
   }
 
+  /** The identity tag of a source file: its path, byte size and mtime,
+    * so regenerated testdata or a different sf dir always misses and
+    * rebuilds. Callers append their store's layout version. */
+  def sourceTagOf(path: String): String = {
+    val f = new File(path)
+    s"$path:${f.length}:${f.lastModified}"
+  }
+
+  /** Where a `kind` store for source tag `tag` lives:
+    * `<java.io.tmpdir>/graft_<kind>_<md5(tag)>`, one directory per
+    * source generation. */
+  def dirFor(kind: String, tag: String): String = {
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(tag.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    new File(sys.props("java.io.tmpdir"), s"graft_${kind}_$md5").getPath
+  }
+
   /** Ensure a complete store tagged `tag` exists at `storeDir`.
     * `build` writes the store's content into the (fresh, per-process)
     * directory path it is given; the marker write and the publish move

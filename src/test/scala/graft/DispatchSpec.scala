@@ -185,7 +185,7 @@ class DispatchSpec extends SparkSuite {
     log.timedSuppress("errors_suppress") {
       RuleEngine.suppressOnKey(RuleEngine.unsuppressed(errors),
         errors.filter(col("actor") === "u1").select("alert_id"),
-        "alert_id", "errors_suppress")
+        Seq("alert_id"), "errors_suppress")
     }
 
     val rows = log.entries
@@ -208,6 +208,22 @@ class DispatchSpec extends SparkSuite {
       }
     }
     assert(log.entries.last.error.isDefined)
+  }
+
+  test("flush records one ERROR row for an observed stage that never " +
+    "ran, within its timeout, and the counts of one that did") {
+    val log = RunLog.newRun()
+    val ran = log.observedInsert("ran")(mkAlerts)
+    log.observedInsert("never_ran")(mkAlerts) // no action ever reads it
+    ran.write.format("noop").mode("overwrite").save()
+    val t0 = System.nanoTime()
+    log.flush(timeoutMs = 500)
+    assert((System.nanoTime() - t0) / 1e9 < 10.0)
+    assert(log.entries.map(r => (r.query_name, r.inserted, r.error)) == Seq(
+      ("ran", 4L, None),
+      ("never_ran", 0L, Some("metrics never observed"))))
+    log.flush(timeoutMs = 500) // nothing is pending any more
+    assert(log.entries.size == 2)
   }
 
   // --- alert_dispatcher.py RECORD-format edge cases (lines 44-92) ---

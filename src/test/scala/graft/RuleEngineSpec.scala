@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.ExistenceJoin
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
 import org.apache.spark.sql.functions._
 
 import graft.engine.{AlertRule, RuleEngine}
@@ -204,7 +206,7 @@ class RuleEngineSpec extends SparkSuite {
   test("suppress flags exactly the given ids") {
     val sup = alerts.filter(col("actor") === "u3").select("alert_id")
     val out = RuleEngine.suppressOnKey(RuleEngine.unsuppressed(alerts), sup,
-      "alert_id", "squelch1")
+      Seq("alert_id"), "squelch1")
     assert(out.filter(col("suppressed")).count() == 1)
     assert(out.filter(col("suppression_rule") === "squelch1").count() == 1)
     assert(out.filter(!col("suppressed")).count() == 3)
@@ -213,14 +215,38 @@ class RuleEngineSpec extends SparkSuite {
   test("suppressOnKey on actor equals id-based suppress of that actor's alerts") {
     val byKey = RuleEngine.suppressOnKey(RuleEngine.unsuppressed(alerts),
       alerts.filter(col("actor") === "u1").select("actor"),
-      "actor", "squelch2")
+      Seq("actor"), "squelch2")
     val byId = RuleEngine.suppressOnKey(RuleEngine.unsuppressed(alerts),
       alerts.filter(col("actor") === "u1").select("alert_id"),
-      "alert_id", "squelch2")
+      Seq("alert_id"), "squelch2")
     val cols = Seq("alert_id", "suppressed", "suppression_rule")
     assert(byKey.select(cols.map(col): _*).orderBy("alert_id").collect().toSeq ==
       byId.select(cols.map(col): _*).orderBy("alert_id").collect().toSeq)
     assert(byKey.filter(col("suppressed")).count() == 3)
+  }
+
+  test("suppressOnKey over a composite key matches every column, and a " +
+    "NULL in either key column never matches") {
+    val frame = Seq[(Int, String, String)]((1, "a", "x"), (2, "a", "y"),
+      (3, null, "x"), (4, "b", null), (5, null, null))
+      .toDF("id", "k1", "k2")
+    // a duplicate pair, and pairs that equal rows 3-5 only if NULL = NULL
+    val keys = Seq[(String, String)](("a", "x"), ("a", "x"), (null, "x"),
+      ("b", null), (null, null)).toDF("k1", "k2")
+    val out = RuleEngine.suppressOnKey(RuleEngine.unsuppressed(frame),
+      keys, Seq("k1", "k2"), "pair")
+    assert(out.filter(col("suppressed")).select("id").as[Int].collect()
+      .toSeq == Seq(1))
+    assert(out.filter(col("suppression_rule") === "pair").count() == 1)
+    // the struct unpacks into a two-column existence test: no struct
+    // comparison (which would find NULL = NULL), no distinct aggregate
+    val plan = out.queryExecution.optimizedPlan
+    val joins = plan.collect { case j: Join => j }
+    assert(joins.size == 1 && joins.head.joinType.isInstanceOf[ExistenceJoin],
+      plan.treeString)
+    assert(joins.head.condition.toSeq.flatMap(_.references).map(_.name)
+      .toSet == Set("k1", "k2"), plan.treeString)
+    assert(plan.collect { case a: Aggregate => a }.isEmpty, plan.treeString)
   }
 
   test("correlate chains within gap, breaks on gap") {

@@ -208,6 +208,33 @@ class RunnerSpec extends SparkSuite {
     assert(added == 0, s"the second window compiled $added new classes")
   }
 
+  test("three released ticks leave no persisted RDD behind") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // a window sliding 6 h a tick; the third drops the 10:00-11:00 alerts
+    Seq(("2024-01-01 00:00:00", "2024-01-02 00:00:00", 3),
+        ("2024-01-01 06:00:00", "2024-01-02 06:00:00", 3),
+        ("2024-01-01 12:00:00", "2024-01-02 12:00:00", 1)).foreach {
+      case (from, to, stored) =>
+      val buf = s"runner-release-${System.nanoTime()}"
+      val res = Runner.runAlerts(
+        events = mkEvents,
+        rules = Seq(
+          rule("errors", col("event_type") === "error"),
+          rule("logins", col("event_type") === "login")),
+        idCol = col("event_id"),
+        suppressions = Seq(SuppressionRule("squelch_u1",
+          alerts => alerts.filter(col("actor") === "u1").select("alert_id"))),
+        sinks = Seq(new MemorySink(buf)),
+        cfg = RunConfig(from, to, alertTimeS = 0L, defaultHandler = "memory"),
+        log = RunLog.newRun())
+      assert(res.store.count() == stored)
+      MemorySink.drain(buf)
+      res.release()
+    }
+    val left = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
+    assert(left.isEmpty, s"three released ticks left ${left.size} RDD(s)")
+  }
+
   test("monitoring rule over run metadata flags failed rule runs") {
     // the reference's snowalert_query_rule_run_errors pattern: the
     // metadata table is itself a rule source (ref: db.record_metadata +

@@ -162,7 +162,7 @@ class StreamingSpec extends SparkSuite {
       org.apache.spark.sql.functions.md5(lit("sr1:1")))
     val supDf = spark.range(1).select(supIds.head.as("alert_id"))
     val q = RuleEngine.suppressOnKey(RuleEngine.unsuppressed(alerts), supDf,
-        "alert_id", "static_squelch")
+        Seq("alert_id"), "static_squelch")
       .writeStream.format("memory").queryName("sup_out")
       .outputMode(OutputMode.Append).start()
     input.addData(
