@@ -331,7 +331,7 @@ object Ann {
     *
     * Output: top-k (vec_id, cell, adc_dist) by ADC distance. */
   def ivfPqAnn(s: SparkSession, dir: String, probeId: Long = 0L,
-      cells: Int = 32, nprobe: Int = 2, k: Int = 10): DataFrame = {
+      cells: Int = Cells, nprobe: Int = 2, k: Int = 10): DataFrame = {
     val e = withV(t(s, dir, "embeddings")).select(col("vec_id"), col("v"))
     def empty = e.select(col("vec_id"), lit(0L).as("cell"),
       lit(0d).as("adc_dist")).limit(0)
@@ -515,7 +515,7 @@ object Ann {
     * `dir`'s embeddings once per source generation (marker-keyed,
     * [[ensurePqStore]]), then answers the q_ann_ivf_pq probe via
     * [[ivfPqAnnStore]] — cell partition pruning, codes-only scan, probe
-    * row excluded. Same frozen model (32 seed cells, 16-codeword
+    * row excluded. Same frozen model ([[Cells]] seed cells, 16-codeword
     * codebook) and same ADC arithmetic as [[ivfPqAnn]], so it is
     * result-identical and the SAME DuckDB oracle verifies the stored
     * path end to end (previously spec-only parity). */
@@ -523,7 +523,7 @@ object Ann {
     val e = withV(t(s, dir, "embeddings")).select(col("vec_id"), col("v"))
     def empty = e.select(col("vec_id"), lit(0L).as("cell"),
       lit(0d).as("adc_dist")).limit(0)
-    val seeds = seedCentroids(e, 32)
+    val seeds = seedCentroids(e, Cells)
     if (seeds.isEmpty) return empty
     val probeRows = e.filter(col("vec_id") === 0L).select(col("v")).head(1)
     if (probeRows.isEmpty) return empty
@@ -661,7 +661,9 @@ object Ann {
     * diverse_sample) block count — one Voronoi cell per seed, the
     * `Cells` lowest vec_ids; the dial to raise with the data so
     * Σ|cell|² stays bounded (§2 #83a) — and its hot-cell cap. The
-    * queries and [[oracle]]'s [[cellCte]] read these same values. */
+    * queries and [[oracle]]'s [[cellCte]] read these same values, and
+    * the IVF-PQ pair (q_ann_ivf_pq, q_ann_ivf_store) and its oracle
+    * seed as many cells. */
   private val Cells = 32
   private val Cap = 500
 
@@ -892,13 +894,13 @@ object Ann {
        |)""".stripMargin
 
   private val IvfPqSql: String =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |d AS (
         |  SELECT vec_id, i, v[i]::DOUBLE AS x,
         |    CAST(floor((i - 1) / 8) AS INTEGER) AS m
         |  FROM e, UNNEST(generate_series(1, len(v))) t(i)
         |),
-        |c0 AS (SELECT vec_id AS cid, i, x FROM d WHERE vec_id < 32),
+        |c0 AS (SELECT vec_id AS cid, i, x FROM d WHERE vec_id < $Cells),
         |assign AS (
         |  SELECT vec_id, cid AS cell FROM (
         |    SELECT d.vec_id, c.cid,
@@ -1031,9 +1033,9 @@ object Ann {
         |GROUP BY c.vec_id
         |ORDER BY adc_dist, vec_id LIMIT 10""".stripMargin,
     // composed IVF-PQ: the pq oracle's subspace machinery restricted to
-    // the probe's 2 nearest of 32 seed cells (cellCte-style assignment;
-    // the ADC table is built from the full probe row, as on the Spark
-    // side). Probed cells rank by the same rounded sqdist + cid tiebreak
+    // the probe's 2 nearest of the `Cells` seed cells (cellCte-style
+    // assignment; the ADC table is built from the full probe row, as on
+    // the Spark side). Probed cells rank by the same rounded sqdist + cid tiebreak
     // as the assignment.
     "q_ann_ivf_pq" -> IvfPqSql,
     // the stored-index path is result-identical to the query-time path

@@ -74,7 +74,11 @@ object Tables {
     * directories are listed/scanned). The ts bounds are
     * [[graft.functions.ParamLiteral]]s, so a scheduler sliding the
     * window reuses the generated code; the date bounds are plain
-    * literals, since pruning evaluates them at planning time. */
+    * literals, since pruning evaluates them at planning time. That is
+    * why a prepared alert tick (`engine.Runner.runAlerts`) re-binds
+    * only its rule pass's own tagged parameters and swaps this frame's
+    * analyzed plan in whole: the date literals, and the file listing
+    * pruned by them, are always the current window's. */
   def timeWindow(events: DataFrame, fromTs: String, toTsExclusive: String): DataFrame = {
     val from = lit(fromTs).cast("timestamp")
     val to = lit(toTsExclusive).cast("timestamp")

@@ -95,8 +95,25 @@ object RuleEngine {
   private def hit(rule: AlertRule, fromTs: String, toTsExclusive: String)
       : Column =
     rule.predicate &&
-      rule.eventTime >= ParamLiteral.timestamp(fromTs) &&
-      rule.eventTime < ParamLiteral.timestamp(toTsExclusive)
+      rule.eventTime >= ParamLiteral.timestamp(fromTs, Some(FromParam)) &&
+      rule.eventTime < ParamLiteral.timestamp(toTsExclusive, Some(ToParam))
+
+  private val FromParam = "window_from"
+  private val ToParam = "window_to"
+  private val AlertTimeParam = "alert_time_s"
+
+  /** The window's values of the tagged parameters a rule frame holds,
+    * by tag: what a prepared rule pass re-binds for another window. */
+  private[engine] def windowParams(fromTs: String, toTsExclusive: String,
+      alertTimeS: Long): Map[String, Any] = Map(
+    FromParam -> ParamLiteral.timestampValue(fromTs),
+    ToParam -> ParamLiteral.timestampValue(toTsExclusive),
+    AlertTimeParam -> alertTimeS)
+
+  /** How many tagged parameters [[runAlertRules]] writes per rule: each
+    * bound of the hit test twice (the pass's filter and its generator)
+    * and `alert_time_s` once. */
+  private[engine] val WindowParamsPerRule = 5
 
   /** The alert row a rule emits for an event it hit. */
   private def alertColumns(rule: AlertRule, idCol: Column, alertTimeS: Long)
@@ -111,7 +128,7 @@ object RuleEngine {
     rule.action.as("action"),
     lit(rule.title).as("title"),
     rule.eventTime.cast("long").as("event_time_s"),
-    ParamLiteral.long(alertTimeS).as("alert_time_s"),
+    ParamLiteral.long(alertTimeS, Some(AlertTimeParam)).as("alert_time_s"),
     rule.description.as("description"),
     lit(rule.detector).as("detector"),
     rule.eventData.as("event_data"),

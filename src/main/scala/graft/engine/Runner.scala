@@ -1,10 +1,20 @@
 package graft.engine
 
+import java.lang.ref.WeakReference
+import java.util.concurrent.atomic.AtomicLong
+
 import scala.collection.mutable
+import scala.util.{Failure, Success, Try}
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession,
+  graftexpr}
+import org.apache.spark.sql.catalyst.expressions.{Attribute,
+  SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
+
+import graft.functions.ParamLiteral
 
 /** A suppression rule: selects the ids to squelch from the current
   * alert set (`alert_id`) or violation set (`id`) (ref:
@@ -44,15 +54,28 @@ final case class RunConfig(
   * action, and the later stages plan over that small materialized set.
   * Rules and suppressions whose frames fail to CONSTRUCT (analysis
   * errors: missing column, bad type) are dropped one by one with an
-  * ERROR row. If either action fails at RUNTIME (a rule's projection or
-  * a suppression's selection throws mid-task: bad regex, malformed
-  * cast, divide-by-zero), the run degrades to per-rule isolation — each
-  * surviving rule is probed with its own action (failing rules record
-  * ERROR rows), and the pipeline re-runs on the healthy set with eager
-  * per-stage metadata. The degraded path scans each rule's input
-  * individually — the correctness-over-scan-sharing trade the
-  * reference's per-rule loop makes on EVERY run, paid here only when a
-  * rule is actually broken.
+  * ERROR row; a rule is analyzed alone only when the fused rule pass
+  * fails to analyze. If either action fails at RUNTIME (a rule's
+  * projection or a suppression's selection throws mid-task: bad regex,
+  * malformed cast, divide-by-zero), the run degrades to per-rule
+  * isolation — each surviving rule is probed with its own action
+  * (failing rules record ERROR rows), and the pipeline re-runs on the
+  * healthy set with eager per-stage metadata. The degraded path scans
+  * each rule's input individually — the correctness-over-scan-sharing
+  * trade the reference's per-rule loop makes on EVERY run, paid here
+  * only when a rule is actually broken.
+  *
+  * An alert tick is prepared: the analyzed rule pass (before its
+  * `observe`) is kept for the last rule set run, one entry per JVM for
+  * a weakly held session. Its key is the rule set and id column by
+  * value, the events frame's analyzed output attributes and the
+  * session's SQL conf. A tick with the same key re-binds only the
+  * pass's window parameters, the two hit bounds and `alert_time_s`,
+  * found as tagged [[graft.functions.ParamLiteral]]s, and swaps the
+  * whole events subtree for its own events' analyzed plan: partition
+  * pruning reads the date literals (`Tables.timeWindow`) at plan time,
+  * so re-binding them inside an old subtree would keep the old file
+  * listing and read the wrong days. Anything else takes the fresh path.
   *
   * Every job a run starts carries the description
   * `runAlerts <run_id>: <stage>` (`runViolations` for violations), so
@@ -214,23 +237,132 @@ object Runner {
     }
   }
 
+  /** One rule's own frame over `cfg`'s window. */
+  private def ruleFrame(events: DataFrame, r: AlertRule, idCol: Column,
+      cfg: RunConfig): DataFrame =
+    RuleEngine.runAlertRule(
+      events, r, idCol, cfg.fromTs, cfg.toTsExclusive, cfg.alertTimeS)
+
   /** Literal-only rule: analysis-safe on any event frame; yields the
     * alert schema with zero rows (the all-rules-broken fallback). */
   private def emptyAlerts(
       events: DataFrame, idCol: Column, cfg: RunConfig): DataFrame =
-    RuleEngine.runAlertRule(
-      events.limit(0),
+    ruleFrame(events.limit(0),
       AlertRule(name = "__no_live_rules", queryId = "", title = "",
         predicate = lit(false), actor = lit(""), target = lit(""),
         action = lit(""), description = lit(""), severity = lit(""),
         eventTime = lit("1970-01-01 00:00:00").cast("timestamp"),
         eventData = lit("{}")),
-      idCol, cfg.fromTs, cfg.toTsExclusive, cfg.alertTimeS)
+      idCol, cfg)
+
+  /** What a prepared rule pass was analyzed for: the rule set and id
+    * column by value (`Column` compares by value), the events' analyzed
+    * output attributes (a frame read again has new ids) and the
+    * session's SQL conf (the time zone, for one, enters analysis). */
+  private final case class PassKey(rules: Seq[AlertRule], idCol: Column,
+      eventsOutput: Seq[Attribute], conf: Map[String, String])
+
+  /** The analyzed plan of one key's rule pass (`RuleEngine.runAlertRules`,
+    * before `observe`), and the events subtree it was analyzed over. */
+  private final class PreparedPass(session: WeakReference[SparkSession],
+      key: PassKey, events: LogicalPlan, pass: LogicalPlan) {
+
+    def isFor(spark: SparkSession, k: PassKey): Boolean =
+      (session.get eq spark) && key == k
+
+    /** The pass over `now` for `cfg`'s window: the events subtree is
+      * swapped whole, so the date-partition literals and the file
+      * listing are this window's (pruning reads them at plan time), and
+      * each tagged window parameter is re-bound to this window's value.
+      * None unless exactly one events subtree was swapped and every
+      * parameter the pass was written with was re-bound, or when the
+      * pass holds a subquery (its own plan would keep its old inputs). */
+    def bind(now: LogicalPlan, cfg: RunConfig): Option[LogicalPlan] = {
+      val values = RuleEngine.windowParams(
+        cfg.fromTs, cfg.toTsExclusive, cfg.alertTimeS)
+      var swapped, rebound = 0
+      var subquery = false
+      def go(p: LogicalPlan): LogicalPlan =
+        if (p eq events) { swapped += 1; now }
+        else {
+          subquery ||= p.expressions.exists(SubqueryExpression.hasSubquery)
+          p.mapChildren(go).transformExpressions {
+            case w: ParamLiteral if w.tag.exists(values.contains) =>
+              rebound += 1
+              w.rebind(values(w.tag.get))
+          }
+        }
+      val plan = go(pass)
+      val params = RuleEngine.WindowParamsPerRule * key.rules.size
+      if (swapped == 1 && rebound == params && !subquery) Some(plan) else None
+    }
+  }
+
+  /** The one prepared rule pass, replaced when a tick's key changes. */
+  @volatile private var prepared: PreparedPass = _
+  private val preparedHitCount = new AtomicLong
+
+  /** Ticks that ran a prepared rule pass, since the JVM started. */
+  private[graft] def preparedHits: Long = preparedHitCount.get
+
+  /** A tick's rule pass, and the rules it holds. Prepared when the key
+    * matches the last tick's; otherwise the fused frame is analyzed
+    * once, and only if that throws is each rule analyzed alone: a rule
+    * broken at ANALYSIS (Datasets analyze eagerly) records its ERROR
+    * row and drops out, and the pass holds the rest. A fused frame that
+    * fails although every rule analyzes alone surfaces its own error.
+    * Only a rule set with no broken rule is prepared. None when no rule
+    * is left. */
+  private def rulePass(events: DataFrame, rules: Seq[AlertRule],
+      idCol: Column, cfg: RunConfig, log: RunLog)
+      : (Seq[AlertRule], Option[DataFrame]) = {
+    val spark = events.sparkSession
+    val eventsPlan = events.queryExecution.analyzed
+    val key = PassKey(rules, idCol, eventsPlan.output, spark.conf.getAll)
+    def pass(rs: Seq[AlertRule]) = RuleEngine.runAlertRules(
+      events, rs, idCol, cfg.fromTs, cfg.toTsExclusive, cfg.alertTimeS)
+    Option(prepared).filter(_.isFor(spark, key))
+        .flatMap(_.bind(eventsPlan, cfg)) match {
+      case Some(plan) =>
+        preparedHitCount.incrementAndGet()
+        (rules, Some(graftexpr.ofAnalyzed(spark, plan)))
+      case None if rules.isEmpty => (Nil, None)
+      case None =>
+        Try(pass(rules)) match {
+          case Success(fused) =>
+            val entry = new PreparedPass(new WeakReference(spark), key,
+              eventsPlan, fused.queryExecution.analyzed)
+            if (entry.bind(eventsPlan, cfg).isDefined) prepared = entry
+            (rules, Some(fused))
+          case Failure(fusedError) =>
+            val constructed = rules.filter { r =>
+              val t0 = System.currentTimeMillis()
+              try { ruleFrame(events, r, idCol, cfg); true }
+              catch {
+                case NonFatal(e) =>
+                  log.record(r.name, t0, System.currentTimeMillis(),
+                    error = Some(String.valueOf(e.getMessage)))
+                  false
+              }
+            }
+            if (constructed.size == rules.size) throw fusedError
+            (constructed, Option.when(constructed.nonEmpty)(pass(constructed)))
+        }
+    }
+  }
 
   /** Run the full alert pipeline. Returned `alerts` are the live
     * (non-suppressed) alerts with correlation ids and the per-handler
     * `handled` results joined on; `store` is the full merged alert set
-    * with suppression flags — the reference's results.alerts table. */
+    * with suppression flags — the reference's results.alerts table.
+    *
+    * A scheduler's ticks share one rule set over a sliding window, so
+    * the rule pass is prepared once per rule set: the first tick keeps
+    * its analyzed plan, and a later tick with the same rules, id column,
+    * events output attributes and session SQL conf re-binds only the
+    * window bounds and `alert_time_s` in it and swaps in its own
+    * events' analyzed plan, instead of analyzing the rules again
+    * ([[rulePass]]). */
   def runAlerts(
       events: DataFrame,
       rules: Seq[AlertRule],
@@ -240,36 +372,23 @@ object Runner {
       cfg: RunConfig,
       log: RunLog): AlertRunResult = {
 
-    def ruleFrame(r: AlertRule): DataFrame =
-      RuleEngine.runAlertRule(
-        events, r, idCol, cfg.fromTs, cfg.toTsExclusive, cfg.alertTimeS)
-
     // 1. every alert rule over the shared time window (ref:
     //    alert_queries_runner.main loops rule views) in ONE pass over
-    //    the events. A rule broken at ANALYSIS (Datasets analyze
-    //    eagerly) records its ERROR metadata row here and drops out;
-    //    the run continues with the rest. Per-rule counts ride the plan
-    //    via one observe() of a count per rule position, so the merge
-    //    materialization reads every event once for all rules.
-    val constructed = rules.filter { r =>
-      val t0 = System.currentTimeMillis()
-      try { ruleFrame(r); true }
-      catch {
-        case NonFatal(e) =>
-          log.record(r.name, t0, System.currentTimeMillis(),
-            error = Some(String.valueOf(e.getMessage)))
-          false
-      }
+    //    the events, less the rules broken at analysis. Per-rule counts
+    //    ride the plan via one observe() of a count per rule position,
+    //    so the merge materialization reads every event once for all
+    //    rules.
+    val (constructed, pass) = rulePass(events, rules, idCol, cfg, log)
+    val fused = pass match {
+      case None => emptyAlerts(events, idCol, cfg)
+      case Some(p) => log.observedInserts(constructed.map(_.name),
+        "rule_pos")(p).drop("rule_pos")
     }
-    val fused =
-      if (constructed.isEmpty) emptyAlerts(events, idCol, cfg)
-      else log.observedInserts(constructed.map(_.name), "rule_pos")(
-        RuleEngine.runAlertRules(events, constructed, idCol, cfg.fromTs,
-          cfg.toTsExclusive, cfg.alertTimeS)).drop("rule_pos")
 
     val run = new Run(events.sparkSession, log, "runAlerts")
     run.fusedOrDegraded(fused,
-        constructed.map(r => r.name -> (() => ruleFrame(r))),
+        constructed.map(r =>
+          r.name -> (() => ruleFrame(events, r, idCol, cfg))),
         emptyAlerts(events, idCol, cfg)) { alerts =>
       // 2. merge/dedup (ref: MERGE_ALERTS), materialized eagerly: the
       //    run's first action. It runs the rule pass and the merge once

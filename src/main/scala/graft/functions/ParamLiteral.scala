@@ -20,9 +20,18 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampType}
   * filter pushdown to parquet and partition pruning see a plain literal,
   * `equals` compares values, and explain text is unchanged. Optimizer
   * rules that fold an expression around it produce a plain `Literal`,
-  * so it pays off only where it is compared or projected as it is. */
-class ParamLiteral(value: Any, dataType: DataType)
-    extends Literal(value, dataType) {
+  * so it pays off only where it is compared or projected as it is.
+  *
+  * A `tag` names the run parameter the value came from. A prepared
+  * alert tick (`engine.Runner`) finds the rule pass's window bounds and
+  * `alert_time_s` in its cached analyzed plan by this tag, never by
+  * value, and [[rebind]]s each to the next window's value; an untagged
+  * parameter is never re-bound. */
+class ParamLiteral(value: Any, dataType: DataType,
+    val tag: Option[String] = None) extends Literal(value, dataType) {
+
+  /** The same parameter holding `v`, of the same type. */
+  def rebind(v: Any): ParamLiteral = new ParamLiteral(v, dataType, tag)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val javaType = CodeGenerator.javaType(dataType)
@@ -39,11 +48,16 @@ class ParamLiteral(value: Any, dataType: DataType)
 
 object ParamLiteral {
   /** `lit(v)` as a parameter. */
-  def long(v: Long): Column = graftexpr.column(new ParamLiteral(v, LongType))
+  def long(v: Long, tag: Option[String] = None): Column =
+    graftexpr.column(new ParamLiteral(v, LongType, tag))
 
-  /** `lit(ts).cast("timestamp")` as a parameter: the string is parsed
-    * here, in the session time zone, as constant folding would. */
-  def timestamp(ts: String): Column = graftexpr.column(new ParamLiteral(
+  /** `lit(ts).cast("timestamp")` as a parameter. */
+  def timestamp(ts: String, tag: Option[String] = None): Column =
+    graftexpr.column(new ParamLiteral(timestampValue(ts), TimestampType, tag))
+
+  /** The internal value of `lit(ts).cast("timestamp")`: the string is
+    * parsed here, in the session time zone, as constant folding would. */
+  def timestampValue(ts: String): Any =
     Cast(Literal(ts), TimestampType,
-      Option(SQLConf.get.sessionLocalTimeZone)).eval(), TimestampType))
+      Option(SQLConf.get.sessionLocalTimeZone)).eval()
 }

@@ -65,8 +65,7 @@ class BaselineRunnerSpec extends SparkSuite {
 
     // negative: a >128-day observation span must FAIL loudly, never
     // fold two days onto one mask bit (the packed-key-guard discipline)
-    val wide = java.nio.file.Files
-      .createTempDirectory("login_guard").toString
+    val wide = tempDir("login_guard").toString
     Seq((1L, "2024-01-01 10:00:00"), (1L, "2024-06-01 10:00:00"))
       .toDF("user_id", "ts_s")
       .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")

@@ -9,7 +9,7 @@ import graft.sources.Connectors
 class ConnectorsSpec extends SparkSuite {
 
   private def tmpFile(name: String, content: String): String = {
-    val dir = Files.createTempDirectory("graft-conn")
+    val dir = tempDir("graft-conn")
     val f = dir.resolve(name)
     Files.writeString(f, content)
     f.toString

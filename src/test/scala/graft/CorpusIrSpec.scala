@@ -36,8 +36,7 @@ class CorpusIrSpec extends SparkSuite {
     // filter, a null vector forms a null-cid group whose VectorSum is
     // null and the driver-side centroid divide NPEs
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_kmeans_null").toString
+    val dir = tempDir("graft_kmeans_null").toString
     val rows = (0L until 12L).map { i =>
       val v: Option[Seq[Float]] =
         if (i == 7L) None
@@ -294,8 +293,7 @@ class CorpusIrSpec extends SparkSuite {
 
   test("bpeTrain merge application is greedy left-to-right ('a a a' case)") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_bpe_train").toString
+    val dir = tempDir("graft_bpe_train").toString
     // corpus = "aaa" x3: merge 1 must be (a,a) f=6 (pairs aa@0, aa@1,
     // per word 2 obs x3 words); applying it greedily leaves [aa, a],
     // so merge 2 is (aa, a) f=3 — an overlap-aware application that
@@ -312,8 +310,7 @@ class CorpusIrSpec extends SparkSuite {
 
   test("bpe loop stops early on a dry corpus; encode still applies what it learned") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_bpe_dry").toString
+    val dir = tempDir("graft_bpe_dry").toString
     // vocab = {"ab"}: merge 1 = (a,b); afterwards every word is one
     // symbol — no pairs remain, the loop must stop at 1 merge (the
     // 8-iteration request must not fail or fabricate merges)
@@ -387,8 +384,7 @@ class CorpusIrSpec extends SparkSuite {
     // element) reaches element_at(hs, 0) and throws. Pin on a corpus
     // the generated testdata never produces.
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_pmi_guard").toString
+    val dir = tempDir("graft_pmi_guard").toString
     Seq((1L, "", "en", "s", 0L), (2L, "solo", "en", "s", 4L),
       (3L, "alpha beta alpha beta alpha beta alpha beta alpha beta",
         "en", "s", 53L))

@@ -79,8 +79,7 @@ class DedupSpec extends SparkSuite {
   }
 
   test("spanExtent finds a planted verbatim cross-doc span") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_span_extent").toString
+    val dir = tempDir("graft_span_extent").toString
     // doc 2 quotes a 6-word span of doc 1 → run of 3 windows, span 6
     Seq(
       (1L, "alpha beta gamma delta epsilon zeta unique1 unique2", "en",

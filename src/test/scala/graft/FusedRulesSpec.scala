@@ -138,4 +138,51 @@ class FusedRulesSpec extends SparkSuite {
     res.store.unpersist(blocking = true)
     res.handlerResults.unpersist(blocking = true)
   }
+
+  test("over consecutive windows of one events frame, an analysis-broken " +
+      "rule records one ERROR row per run, the healthy rules their counts") {
+    val ev = events
+    val rules = Seq(
+      rule("errors", col("event_type") === "error"),
+      rule("no_such_col", col("nonexistent_column") === "x"),
+      rule("logins", col("event_type") === "login"))
+    // the second window takes in the next day's 00:30 error
+    Seq((From, To, 4L), ("2024-01-01 06:00:00", "2024-01-02 06:00:00", 5L))
+        .foreach { case (from, to, errors) =>
+      val log = RunLog.newRun()
+      val buf = s"fused-windows-${System.nanoTime()}"
+      val res = Runner.runAlerts(ev, rules, col("event_id"), Nil,
+        Seq(new MemorySink(buf)),
+        RunConfig(from, to, alertTimeS = AtS, defaultHandler = "memory"), log)
+      MemorySink.drain(buf)
+      assert(log.entries.map(e => (e.query_name, e.error.isDefined,
+        e.inserted)).take(3) ==
+        Seq(("no_such_col", true, 0L), ("errors", false, errors),
+          ("logins", false, 2L)))
+      assert(log.entries.count(_.error.isDefined) == 1)
+      res.release()
+    }
+  }
+
+  test("rules that analyze alone but not in one pass surface the pass's " +
+      "analysis error") {
+    val ev = events
+    // event_data a string for one rule, a struct for the other: each
+    // rule's frame analyzes, their alert rows do not unify
+    val rules = Seq(
+      rule("text_data", col("event_type") === "error"),
+      rule("struct_data", col("event_type") === "login",
+        eventData = struct(col("value"))))
+    rules.foreach(RuleEngine.runAlertRule(ev, _, col("event_id"), From, To,
+      AtS))
+    val direct = intercept[org.apache.spark.sql.AnalysisException](
+      RuleEngine.runAlertRules(ev, rules, col("event_id"), From, To, AtS))
+    val log = RunLog.newRun()
+    val thrown = intercept[org.apache.spark.sql.AnalysisException](
+      Runner.runAlerts(ev, rules, col("event_id"), Nil, Nil,
+        RunConfig(From, To, alertTimeS = AtS), log))
+    assert(thrown.getCondition == direct.getCondition)
+    assert(thrown.getMessage == direct.getMessage)
+    assert(log.entries.isEmpty)
+  }
 }

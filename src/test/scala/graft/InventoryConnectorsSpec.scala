@@ -12,7 +12,7 @@ import graft.sources.InventoryConnectors
 class InventoryConnectorsSpec extends SparkSuite {
 
   private def tmpFile(name: String, content: String): String = {
-    val dir = Files.createTempDirectory("graft-inv")
+    val dir = tempDir("graft-inv")
     val f = dir.resolve(name)
     Files.writeString(f, content)
     f.toString
@@ -72,7 +72,7 @@ class InventoryConnectorsSpec extends SparkSuite {
   }
 
   test("aws config items land with filename-derived event_time") {
-    val dir = Files.createTempDirectory("graft-cfg")
+    val dir = tempDir("graft-cfg")
     val f = dir.resolve("cfg_20240105T120000Z_part0.jsonl")
     Files.writeString(f,
       """{"configurationItemCaptureTime":"2024-01-05T11:59:00Z","awsAccountId":"111122223333","awsRegion":"us-east-1","resourceType":"AWS::EC2::SecurityGroup","ARN":"arn:aws:ec2:sg/sg-1","resourceId":"sg-1","resourceName":"web","configuration":{"groupId":"sg-1"},"tags":{"env":"prod"}}

@@ -14,8 +14,7 @@ import graft.sources.Layout
   * where NEITHER side broadcasts — the threshold simulates it. */
 class LayoutSpec extends SparkSuite {
 
-  private lazy val wh =
-    java.nio.file.Files.createTempDirectory("graft_layout_").toString
+  private lazy val wh = tempDir("graft_layout_").toString
 
   private def withConf(pairs: (String, String)*)(f: => Unit): Unit = {
     val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }

@@ -38,7 +38,7 @@ class MaterializeSpec extends SparkSuite {
 
   test("spark.graft.checkpointDir routes materialization to reliable " +
       "checkpoint files") {
-    val dir = Files.createTempDirectory("graft-ckpt").toString
+    val dir = tempDir("graft-ckpt").toString
     spark.conf.set(Materialize.ConfKey, dir)
     try {
       val out = Materialize.frame(Seq(1, 2, 3, 4).toDF("x"))
@@ -50,7 +50,7 @@ class MaterializeSpec extends SparkSuite {
   }
 
   test("connectedComponents survives and converges on the reliable path") {
-    val dir = Files.createTempDirectory("graft-ckpt-cc").toString
+    val dir = tempDir("graft-ckpt-cc").toString
     spark.conf.set(Materialize.ConfKey, dir)
     try {
       val pairs = Seq(("a", "b"), ("b", "c"), ("x", "y"))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
@@ -48,7 +46,7 @@ class MergeStorePlanSpec extends SparkSuite {
     // store: 100 merged keys (u0..u99) written to parquet so the plan
     // has a real FileSourceScan to track; batch: 20 alerts — u0..u9
     // match the store, u100..u109 are new
-    val base = Files.createTempDirectory("graft_merge_store").toString
+    val base = tempDir("graft_merge_store").toString
     RuleEngine.mergeAlerts(mkAlerts(1L to 200L, 100))
       .write.parquet(s"$base/store")
     val store = spark.read.parquet(s"$base/store")
@@ -99,7 +97,7 @@ class MergeStorePlanSpec extends SparkSuite {
   test("mergeIntoStoreClustered over a store landed bucketed on the " +
       "merge key: the store side never shuffles and the result matches " +
       "the broadcast merge") {
-    val base = Files.createTempDirectory("graft_merge_clust").toString
+    val base = tempDir("graft_merge_clust").toString
     val storeFrame = RuleEngine.mergeAlerts(mkAlerts(1L to 200L, 100))
     graft.sources.Layout.landBucketedKeys(
       storeFrame.repartition(8, col("object"), col("description")),

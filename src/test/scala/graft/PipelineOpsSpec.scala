@@ -77,8 +77,7 @@ class PipelineOpsSpec extends SparkSuite {
     val avgW = BigDecimal(w).setScale(4, BigDecimal.RoundingMode.HALF_UP)
     val expected = BigDecimal(1.0 / (1.0 + math.exp(-4.0 * avgW.toDouble)))
       .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val docsDir = java.nio.file.Files
-      .createTempDirectory("qc_pin").toString
+    val docsDir = tempDir("qc_pin").toString
     Seq((0L, "spark spark spark", "en", "pin", 17L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$docsDir/documents.parquet")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -22,7 +20,7 @@ class PruningSpec extends SparkSuite {
   }
 
   test("time-windowed read prunes to matching date partitions") {
-    val out = Files.createTempDirectory("graft-part")
+    val out = tempDir("graft-part")
       .resolve("events").toString
     Tables.writePartitionedEvents(spark, Sf, out)
 
@@ -78,7 +76,7 @@ class PruningSpec extends SparkSuite {
     val history = e.filter(col("vec_id") < 8)
     val (seeds, cellStore) = StreamingCorpus.cellStoreOf(history, cells = 8)
     assert(seeds.size == 8)
-    val base = Files.createTempDirectory("graft_ivf_store").toString
+    val base = tempDir("graft_ivf_store").toString
     val input = MemoryStream[StreamVec]
     input.addData(vecs.toIndexedSeq: _*)
     // τ > 1 admits every arrival: the landing layout is what's under test
@@ -148,7 +146,7 @@ class PruningSpec extends SparkSuite {
     val (seeds, cellStore) = StreamingCorpus.cellStoreOf(history, cells = 8)
     val cbs = Ann.pqCodebookOf(e)
     assert(cbs.size == 16)
-    val base = Files.createTempDirectory("graft_ivfpq_store").toString
+    val base = tempDir("graft_ivfpq_store").toString
     val input = MemoryStream[StreamVec]
     input.addData(vecs.toIndexedSeq: _*)
     StreamingCorpus.landVectorsPq(input.toDF(), seeds, cellStore, cbs,

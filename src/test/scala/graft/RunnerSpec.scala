@@ -208,6 +208,105 @@ class RunnerSpec extends SparkSuite {
     assert(added == 0, s"the second window compiled $added new classes")
   }
 
+  test("a second window over one events frame and one rule set re-binds " +
+      "the prepared rule pass and compiles no new code") {
+    // a scheduler's ticks: the same frame and rules, only the window
+    // moves, so the second tick takes the prepared pass
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val events = mkEvents
+    val rules = Seq(
+      rule("errors", col("event_type") === "error"),
+      rule("logins", col("event_type") === "login"))
+    val suppressions = Seq(SuppressionRule("squelch_u1",
+      alerts => alerts.filter(col("actor") === "u1").select("alert_id")))
+    def tick(from: String, to: String, atS: Long): (Long, Long, Seq[Long]) = {
+      val buf = s"runner-prepared-${System.nanoTime()}"
+      val log = RunLog.newRun()
+      val res = Runner.runAlerts(events, rules, col("event_id"),
+        suppressions, Seq(new MemorySink(buf)),
+        RunConfig(from, to, alertTimeS = atS, defaultHandler = "memory"),
+        log)
+      // one query per tick, as the test above: every other query's
+      // classes would crowd the codegen cache between the two ticks
+      val live = res.alerts.collect().toSeq
+      MemorySink.drain(buf)
+      res.release()
+      (live.size.toLong, log.entries.find(_.query_name == "errors").get
+        .inserted, live.map(_.getAs[Long]("alert_time_s")).distinct)
+    }
+    assert(tick("2024-01-01 00:00:00", "2024-01-02 00:00:00", 1704153600L) ==
+      ((2L, 4L, Seq(1704153600L))))
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val hits = Runner.preparedHits
+    // from 10:15 on, u1's 10:00 error is out: the bounds were re-bound.
+    // Every stage keeps rows, so adaptive execution plans the same
+    // stages (an empty one would re-plan, and compile, around it)
+    assert(tick("2024-01-01 10:15:00", "2024-01-02 10:15:00", 1704190500L) ==
+      ((2L, 3L, Seq(1704190500L))))
+    val added = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+    assert(added == 0, s"the second window compiled $added new classes")
+    assert(Runner.preparedHits == hits + 1)
+  }
+
+  test("a changed rule, a re-read events frame or another session time " +
+      "zone takes the fresh rule pass, with a fresh run's alerts") {
+    val events = mkEvents
+    def rules = Seq(
+      rule("errors", col("event_type") === "error"),
+      rule("logins", col("event_type") === "login"))
+    def run(ev: org.apache.spark.sql.DataFrame, rs: Seq[AlertRule])
+        : Seq[String] = {
+      val buf = s"runner-fresh-${System.nanoTime()}"
+      val res = Runner.runAlerts(ev, rs, col("event_id"), Nil,
+        Seq(new MemorySink(buf)),
+        RunConfig("2024-01-01 00:00:00", "2024-01-01 11:30:00",
+          alertTimeS = 1704108600L, defaultHandler = "memory"),
+        RunLog.newRun())
+      val out = res.alerts.drop("handled").collect().map(_.toString)
+        .toSeq.sorted
+      MemorySink.drain(buf)
+      res.release()
+      out
+    }
+    // another key in between: the next run analyzes afresh
+    def fresh(ev: org.apache.spark.sql.DataFrame, rs: Seq[AlertRule]) = {
+      run(ev, Seq(rule("evict", lit(false))))
+      run(ev, rs)
+    }
+    def freshPath(body: => Seq[String]): Seq[String] = {
+      val hits = Runner.preparedHits
+      val out = body
+      assert(Runner.preparedHits == hits, "took the prepared pass")
+      out
+    }
+    run(events, rules)
+    // equal by value is the same key: a hit
+    val hits = Runner.preparedHits
+    run(events, rules)
+    assert(Runner.preparedHits == hits + 1)
+
+    val changed = rules.updated(1,
+      rule("logins", col("event_type") === "login" && col("value") > 10.0))
+    val afterRuleChange = freshPath(run(events, changed))
+    assert(afterRuleChange == fresh(events, changed))
+    assert(afterRuleChange.size == 1) // the 5.0 login no longer hits
+
+    run(events, rules)
+    val reread = mkEvents
+    assert(freshPath(run(reread, rules)) == fresh(reread, rules))
+
+    run(events, rules)
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try {
+      // the window is 08:00-19:30 UTC there: u3's errors are inside
+      val inLosAngeles = freshPath(run(events, rules))
+      assert(inLosAngeles == fresh(events, rules))
+      assert(inLosAngeles.size == 3)
+    } finally spark.conf.set("spark.sql.session.timeZone", tz)
+    assert(run(events, rules).size == 2)
+  }
+
   test("three released ticks leave no persisted RDD behind") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     // a window sliding 6 h a tick; the third drops the 10:00-11:00 alerts

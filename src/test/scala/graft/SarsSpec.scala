@@ -29,8 +29,7 @@ class SarsSpec extends SparkSuite {
   }
 
   test("writeBack round-trips the baseline through parquet") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("sars").resolve("baseline").toString
+    val dir = tempDir("sars").resolve("baseline").toString
     val base = SarsPack.processBaseline(pe)
     SarsPack.writeBack(base, dir)
     val back = spark.read.parquet(dir)

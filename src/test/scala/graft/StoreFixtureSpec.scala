@@ -27,7 +27,7 @@ class StoreFixtureSpec extends SparkSuite {
     val e = vecs
     val seeds = Ann.seedCentroidsOf(e, 8)
     val cbs = Ann.pqCodebookOf(e)
-    val dir = Files.createTempDirectory("graft_fixture").toString
+    val dir = tempDir("graft_fixture").toString
     Ann.ensurePqStore(e, seeds, cbs, dir, "tagA")
     val files = spark.read.parquet(dir).inputFiles.sorted
     assert(files.nonEmpty)
@@ -49,7 +49,7 @@ class StoreFixtureSpec extends SparkSuite {
   test("FixtureStore.ensure publishes via atomic move and keeps the " +
       "previous store when a rebuild fails mid-build") {
     import graft.sources.FixtureStore
-    val dir = Files.createTempDirectory("graft_fs")
+    val dir = tempDir("graft_fs")
       .resolve("store").toString
     FixtureStore.ensure(dir, "t1") { p =>
       Files.createDirectories(java.nio.file.Paths.get(p))

@@ -60,10 +60,8 @@ class StreamingCorpusSpec extends SparkSuite {
 
   test("landSignatures appends a readable parquet signature store") {
     implicit val ctx = spark.sqlContext
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-sig-store").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-sig-ckpt").toString
+    val store = tempDir("graft-sig-store").toString
+    val ckpt = tempDir("graft-sig-ckpt").toString
     val input = MemoryStream[StreamDoc]
     input.addData(
       StreamDoc(1, "spark table scan runs fast", ts("2024-01-01 10:00:00")),
@@ -197,8 +195,7 @@ class StreamingCorpusSpec extends SparkSuite {
       (2L, Array(1.0, 0.1, 0.0, 0.0)))
       .toDF("vec_id", "v")
     val (seeds, store) = StreamingCorpus.cellStoreOf(history, cells = 2)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_land_vec").toString
+    val base = tempDir("graft_land_vec").toString
     val input = MemoryStream[StreamVec]
     input.addData(
       StreamVec(10L, Array(0.95, 0.2, 0.0, 0.0)),  // dup of vec 2

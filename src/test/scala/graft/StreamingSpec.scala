@@ -21,7 +21,7 @@ class StreamingSpec extends SparkSuite {
     // landing projection the batch connector uses, and read the typed
     // columns from the sink — the continuous analogue of
     // connectors_runner's scheduled landing
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-land")
+    val dir = tempDir("graft-stream-land")
     java.nio.file.Files.writeString(dir.resolve("ct1.jsonl"),
       """{"eventID":"e1","eventTime":"2024-01-01T10:00:00Z","eventName":"CreateUser","awsRegion":"us-east-1","recipientAccountId":"111122223333","userIdentity":{"type":"IAMUser","arn":"arn:a","userName":"alice"}}
         |""".stripMargin)
@@ -182,7 +182,7 @@ class StreamingSpec extends SparkSuite {
     // each AvailableNow run resumes the offsets and the dedup state from
     // the checkpoint, like every scheduled ingest cycle; the second file
     // repeats event 1 inside the watermark
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-restart")
+    val root = tempDir("graft-stream-restart")
     val Seq(src, sink, ck) =
       Seq("src", "sink", "ck").map(root.resolve(_).toString)
     def arrive(evs: StreamEv*): Unit =

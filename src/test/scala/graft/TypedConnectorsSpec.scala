@@ -12,7 +12,7 @@ import graft.sources.{CloudTrail, Okta}
 class TypedConnectorsSpec extends SparkSuite {
 
   private def tmpFile(name: String, content: String): String = {
-    val dir = Files.createTempDirectory("graft-typed")
+    val dir = tempDir("graft-typed")
     val f = dir.resolve(name)
     Files.writeString(f, content)
     f.toString

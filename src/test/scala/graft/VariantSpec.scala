@@ -93,8 +93,7 @@ class VariantSpec extends SparkSuite {
 
   test("media phash pairs same-length near-identical payloads, not edits of length") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_phash").toString
+    val dir = tempDir("graft_phash").toString
     val base = "the quick brown fox jumps over the lazy dog repeatedly" * 3
     // doc 2 = doc 1 with ONE byte changed (same length): at most a few
     // of the 33 samples shift → small hamming → paired. doc 3 is

@@ -13,7 +13,7 @@ class VerifySpec extends SparkSuite {
 
   test("a failing query leaves no output, stale or partial, and keeps " +
       "its oracle key") {
-    val out = Files.createTempDirectory("graft_verify").toString
+    val out = tempDir("graft_verify").toString
     // an earlier run's output under each failing name
     for (name <- Seq("q_bad_plan", "q_bad_run"))
       spark.range(3).write.parquet(s"$out/$name")
